@@ -246,13 +246,9 @@ def main(argv: list[str] | None = None) -> int:
             problems = config.validate(len(survey.columns))
             if problems:
                 raise SystemExit("config invalid: " + "; ".join(problems))
+            # the classified frame comes back materialized, so the four
+            # branch writes and the status-count collect read one result
             result = run_pipeline(survey, registry, config)
-            # persist: the classified frame feeds four branch writes plus
-            # the status-count collect — without it each action re-runs
-            # the whole ingest+classify DAG, and the valid/duplicate fork
-            # tie-breaks on a row key that is NOT stable across
-            # independent recomputations
-            result.frame.persist()
             for status in ("valid", "duplicate", "unmatched", "blank_name"):
                 dest = os.path.join(args.out, status)
                 result.branch(status).write.mode("overwrite").parquet(dest)
@@ -264,7 +260,9 @@ def main(argv: list[str] | None = None) -> int:
                 .agg(F.count("*").alias("n"))
                 .collect()
             }
-            result.frame.unpersist()
+            from fefal_etl_spark.cache import release_checkpoints
+
+            release_checkpoints()
             print(json.dumps({"out": args.out, "status_counts": counts}))
         elif args.cmd == "sql":
             from pyspark.sql import DataFrame

@@ -24,6 +24,14 @@ still depends on. (Correctness was never at risk — Spark recomputes an
 unpersisted frame — but the persist's benefit was silently lost.)
 Without an active scope, ``track`` falls back to the process-global
 list, preserving the single-threaded harness contract.
+
+:func:`local_checkpoint` is the materialization barrier ``run_pipeline``
+returns each survey wave through. Each checkpoint has one owner. By
+default that is the thread that made it: :func:`release_checkpoints`
+frees the checkpoints of the calling thread only, so a loader releasing
+its wave never frees another thread's wave mid-commit. A long-lived
+cache takes a checkpoint over with :func:`keep_checkpoint` and frees it
+itself with :func:`free_checkpoint` when it drops the entry.
 """
 
 from __future__ import annotations
@@ -36,6 +44,7 @@ from pyspark.sql import DataFrame
 _LOCK = threading.Lock()
 _TRACKED: list[DataFrame] = []
 _SCOPED = threading.local()  # .stack: list[list[DataFrame]] per thread
+_CHECKPOINTS = threading.local()  # .frames: list[DataFrame] per thread
 
 
 def _current_list() -> list[DataFrame]:
@@ -92,3 +101,54 @@ def tracking_scope():
             pending = list(frames)
             frames.clear()
         _drain(pending)
+
+
+def _thread_checkpoints() -> list[DataFrame]:
+    frames = getattr(_CHECKPOINTS, "frames", None)
+    if frames is None:
+        frames = _CHECKPOINTS.frames = []
+    return frames
+
+
+def local_checkpoint(df: DataFrame) -> DataFrame:
+    """Run ``df`` once and return its rows with the lineage cut: every
+    later consumer scans the materialized partitions instead of
+    re-running (and re-shipping) the plan. The blocks are stored
+    memory-and-disk, so memory pressure spills them rather than losing
+    them. Unlike ``persist`` + reliable ``checkpoint`` this costs one job
+    and keeps AQE's coalesced partitioning, so a small wave stays one
+    partition (one file per table it feeds).
+
+    The frame is held for the calling thread until
+    :func:`release_checkpoints` runs on that thread, or until an owner
+    takes it over with :func:`keep_checkpoint`. Reading it after it is
+    freed fails, since the lineage to recompute it is gone."""
+    out = df.localCheckpoint(eager=True)
+    _thread_checkpoints().append(out)
+    return out
+
+
+def keep_checkpoint(df: DataFrame) -> DataFrame:
+    """Take ``df`` (a :func:`local_checkpoint` frame made on this thread)
+    out of the thread's hold: :func:`release_checkpoints` no longer frees
+    it, and the caller frees it with :func:`free_checkpoint`."""
+    frames = _thread_checkpoints()
+    frames[:] = [f for f in frames if f is not df]
+    return df
+
+
+def free_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks behind one :func:`local_checkpoint` frame."""
+    try:
+        df._jdf.logicalPlan().rdd().unpersist(False)
+    except Exception:
+        pass
+
+
+def release_checkpoints() -> None:
+    """Free every checkpoint the calling thread made and still holds."""
+    frames = _thread_checkpoints()
+    drop = list(frames)
+    frames.clear()
+    for df in drop:
+        free_checkpoint(df)

@@ -9,11 +9,20 @@ engine keeps ONE immutable DataFrame end to end:
 - every per-group mutation is a column expression on the shared frame;
 - the valid/duplicate/unmatched/blank fork is a single ``status`` column
   (etl_ui.py:109-125) computed in the same DAG; callers filter per branch
-  over one cached result.
+  over one materialized result.
 
-Scale: the whole pipeline is narrow (projections) except (a) the broadcast
-registry join (no shuffle of the survey side) and (b) the dedup window (one
-hash shuffle on id_entidade). Catalyst prunes/pushes everything else.
+Materialization: ``run_pipeline`` runs the DAG once, through
+:func:`fefal_etl_spark.cache.local_checkpoint`, and returns the
+classified frame with its lineage cut. The valid branch, the rejected
+branches and every star table ``build_star`` derives read that one
+result: the CSV and the registry are scanned once per wave, and a row's
+``status`` and row key cannot differ between two branch writes. The
+checkpoint is held for the calling thread: its blocks stay in the block
+manager until that thread has written what it needs and calls
+``plans.star.release_star_cache()`` (or ``cache.release_checkpoints``).
+A cache that keeps the result past the wave takes the checkpoint over
+with ``cache.keep_checkpoint`` and frees it itself
+(``plans.queries._evict``). The frame cannot be read once freed.
 """
 
 from __future__ import annotations
@@ -23,6 +32,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fefal_etl_spark.cache import local_checkpoint
 from fefal_etl_spark.functions import (
     coalesce_submission,
     duration_seconds,
@@ -191,7 +201,7 @@ def run_pipeline(
     ).drop("__is_blank")
 
     return PipelineResult(
-        frame=df,
+        frame=local_checkpoint(df),
         groups=groups,
         interest_value_cols=value_cols,
         interest_comment_cols=comment_cols,

@@ -15,6 +15,13 @@ Outputs (dw_creation.sql naming):
 - ``comentario``                                      (operational only, etl_ui.py:558-564)
 - ``dim_preferencia_ensino`` + ``fact_resposta_preferencia`` (25-28, 76-83)
 - ``dim_disponibilidade_horaria`` + ``fact_resposta_disponibilidade`` (35-40, 85-92)
+
+Materialization: the facts read the classified frame ``run_pipeline``
+materialized (its local checkpoint); the dims and lookups are local
+relations built here. ``build_star`` persists nothing. A loader calls
+:func:`release_star_cache` on the thread that ran the wave once every
+table of the wave is written, which frees that checkpoint (and no other
+thread's).
 """
 
 from __future__ import annotations
@@ -22,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fefal_etl_spark.cache import release_checkpoints
 from fefal_etl_spark.functions import extract_content_in_brackets, normalize_text
 from fefal_etl_spark.functions.text import py_extract_brackets, py_normalize_text
 from fefal_etl_spark.operators import (
@@ -39,45 +47,14 @@ from fefal_etl_spark.plans.pipeline import PipelineResult
 
 ID_INQ = "id_inquerito"
 
-# Frames persisted by build_star, tagged with the owning application id so
-# long-lived sessions (bench/oracle loops) can release the blocks instead of
-# accumulating them, and a NEW application can drop entries whose blocks died
-# with a previous context (see plans.queries.release_pipeline_cache).
-_PERSISTED: list[tuple[str, DataFrame]] = []
 
-
-def release_star_frames(frames) -> None:
-    """Unpersist SPECIFIC tracked frames and drop them from the
-    registry — the per-entry release the `_SHARED_FULL` LRU eviction
-    needs (review r12: evicting a cache entry unpersisted only the
-    classified frame; the `valid` branch build_star persists here
-    leaked one fully-persisted EP2 frame per evicted config)."""
-    ids = {id(f) for f in frames}
-    keep: list[tuple[str, DataFrame]] = []
-    for owner, df in _PERSISTED:
-        if id(df) in ids:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        else:
-            keep.append((owner, df))
-    _PERSISTED[:] = keep
-
-
-def release_star_cache(app_id: str | None = None) -> None:
-    """Unpersist tracked star frames — all of them, or (with ``app_id``)
-    only the ones owned by OTHER applications (dead-context cleanup)."""
-    keep: list[tuple[str, DataFrame]] = []
-    for owner, df in _PERSISTED:
-        if app_id is not None and owner == app_id:
-            keep.append((owner, df))
-            continue
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _PERSISTED[:] = keep
+def release_star_cache() -> None:
+    """Release what a wave load holds once its tables are committed: the
+    classified frames ``run_pipeline`` materialized on this thread.
+    Checkpoints another thread holds, or a cache took over with
+    ``cache.keep_checkpoint``, stay readable. ``build_star`` itself
+    persists nothing."""
+    release_checkpoints()
 
 
 def _upsert(existing, incoming, key, id_col, mode: str):
@@ -85,10 +62,28 @@ def _upsert(existing, incoming, key, id_col, mode: str):
     return fn(existing, incoming, key, id_col)
 
 
-def _name_map_df(spark_df: DataFrame, cols: list[str], clean) -> list[tuple[str, str]]:
-    """Original column name -> cleaned display/dim name (driver-side
-    metadata, mirroring the reference's header rewrites)."""
-    return [(c, clean(c)) for c in cols]
+def _local(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """Driver-side rows as an Arrow-backed local relation: consumers scan
+    it as a ``LocalTableScan`` inside the JVM. ``createDataFrame(list)``
+    would instead re-serialize through a ``PythonRDD``, so every scan of
+    a 20-row lookup ran Python-worker tasks."""
+    import pyarrow as pa
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    cols = {f.name: [r[i] for r in rows] for i, f in enumerate(struct.fields)}
+    return spark.createDataFrame(pa.table(cols), struct)
+
+
+def _localize(df: DataFrame) -> DataFrame:
+    """Run a header-sized frame once and re-issue its rows as a local
+    relation without leaving the JVM: its commit writes a
+    ``LocalTableScan`` and every fact join broadcasts the rows instead of
+    recomputing the upsert's shuffles. One partition, so a committed dim
+    is one file."""
+    spark = df.sparkSession
+    jdf = spark._jsparkSession.createDataFrame(df._jdf.collectAsList(), df._jdf.schema())
+    return DataFrame(jdf.coalesce(1), spark)
 
 
 def build_star(
@@ -102,16 +97,18 @@ def build_star(
     ``existing_dims`` enables idempotent re-loads (S7 upsert semantics);
     ``tipos_disponibilidades`` is the (id_tipo_disp, descricao_tipo_disp)
     dim driving the J4 prefix match (etl_ui.py:603-621).
+
+    Facts stay lazy over ``result.frame``, which ``run_pipeline`` already
+    materialized, so the up to 12 consumers of the valid branch read that
+    one result instead of re-running the EP2 transform. Everything
+    header-sized is a local relation: the header→name lookups are built
+    on the driver (:func:`_local`), and each dimension and the
+    availability header→tipo match run once here and come back as rows
+    (:func:`_localize`). Nothing here is persisted; the caller releases
+    ``result.frame`` with :func:`release_star_cache` after its writes.
     """
     existing_dims = existing_dims or {}
-    # The star build fans the valid branch out to every fact and dim (up to
-    # 12 consumers) — without a materialization barrier each one re-executes
-    # the whole EP2 transform (observed: 6 parquet scans in the
-    # pipeline_star_formations plan for a 2-consumer subset). Persist once;
-    # at 100 TB replace with a checkpoint/staging-table write (cache won't
-    # hold the full valid branch).
-    valid = result.valid.withColumn(ID_INQ, F.col(ROW_KEY)).persist()
-    _PERSISTED.append((valid.sparkSession.sparkContext.applicationId, valid))
+    valid = result.valid.withColumn(ID_INQ, F.col(ROW_KEY))
     out: dict[str, DataFrame] = {}
 
     # --- fact_inquerito (etl_ui.py:404-429) --------------------------------
@@ -139,10 +136,8 @@ def build_star(
     if form_cols:
         # header → dim name: clean + bracket-extract of the normalized header
         # (etl_ui.py:238-239)
-        name_pairs = _name_map_df(
-            valid, form_cols, lambda c: py_extract_brackets(py_normalize_text(c))
-        )
-        names_df = spark.createDataFrame(name_pairs, "orig string, nome_formacao string")
+        name_pairs = [(c, py_extract_brackets(py_normalize_text(c))) for c in form_cols]
+        names_df = _local(spark, name_pairs, "orig string, nome_formacao string")
         dim = _upsert(
             existing_dims.get("dim_formacao"),
             names_df.select("nome_formacao"),
@@ -160,10 +155,11 @@ def build_star(
             dim = dim.withColumn(
                 "id_formacao_base", F.lit(None).cast("long")
             ).withColumn("id_grupo_formacao", F.lit(None).cast("long"))
-        out["dim_formacao"] = dim
+        dim = out["dim_formacao"] = _localize(dim)
         out["dim_grupo_formacao"] = existing_dims.get(
             "dim_grupo_formacao",
-            spark.createDataFrame(
+            _local(
+                spark,
                 [],
                 "id_grupo_formacao bigint, nome_grupo string, "
                 "descrissao_grupo string",  # [sic] dw_creation.sql:9
@@ -188,17 +184,16 @@ def build_star(
         }
         valid_int = valid.withColumnsRenamed(int_renames)
         norm_value_cols = [py_normalize_text(c) for c in value_cols]
-        dim_inc = spark.createDataFrame(
-            [(c,) for c in norm_value_cols], "nome_area string"
+        dim_inc = _local(spark, [(c,) for c in norm_value_cols], "nome_area string")
+        dim_area = out["dim_area_tematica"] = _localize(
+            _upsert(
+                existing_dims.get("dim_area_tematica"),
+                dim_inc,
+                "nome_area",
+                "id_interesse",
+                key_mode,
+            )
         )
-        dim_area = _upsert(
-            existing_dims.get("dim_area_tematica"),
-            dim_inc,
-            "nome_area",
-            "id_interesse",
-            key_mode,
-        )
-        out["dim_area_tematica"] = dim_area
         interests = unpivot_interests_with_comments(
             valid_int, ID_INQ, norm_value_cols, comment_suffix="[comentario]"
         )
@@ -230,18 +225,19 @@ def build_star(
     # --- preferências: R3 (etl_ui.py:567-600) ------------------------------
     pref_cols = result.groups.get("tipo de ensino", [])
     if pref_cols:
-        pref_pairs = _name_map_df(valid, pref_cols, py_normalize_text)
-        pref_names = spark.createDataFrame(
-            pref_pairs, "orig string, descricao_preferencia string"
+        pref_pairs = [(c, py_normalize_text(c)) for c in pref_cols]
+        pref_names = _local(
+            spark, pref_pairs, "orig string, descricao_preferencia string"
         )
-        dim_pref = _upsert(
-            existing_dims.get("dim_preferencia_ensino"),
-            pref_names.select("descricao_preferencia"),
-            "descricao_preferencia",
-            "id_preferencia",
-            key_mode,
+        dim_pref = out["dim_preferencia_ensino"] = _localize(
+            _upsert(
+                existing_dims.get("dim_preferencia_ensino"),
+                pref_names.select("descricao_preferencia"),
+                "descricao_preferencia",
+                "id_preferencia",
+                key_mode,
+            )
         )
-        out["dim_preferencia_ensino"] = dim_pref
         long = unpivot_preferences(valid, ID_INQ, pref_cols, var_name="orig")
         long = long.join(F.broadcast(pref_names), on="orig").drop("orig")
         out["fact_resposta_preferencia"] = long.join(
@@ -251,22 +247,25 @@ def build_star(
     # --- disponibilidade: J4 prefix + F3 + R4 (etl_ui.py:603-658) ----------
     disp_cols = result.groups.get("disponibilidade", [])
     if disp_cols:
-        headers = spark.createDataFrame([(c,) for c in disp_cols], "orig string")
+        headers = _local(spark, [(c,) for c in disp_cols], "orig string")
         if tipos_disponibilidades is not None:
             matched = prefix_join(headers, tipos_disponibilidades, "orig")
         else:
             matched = headers.withColumn("id_tipo_disp", F.lit(None).cast("int"))
-        matched = matched.withColumn(
-            "descricao_horario", extract_content_in_brackets(F.col("orig"))
+        matched = _localize(
+            matched.withColumn(
+                "descricao_horario", extract_content_in_brackets(F.col("orig"))
+            )
         )
-        dim_hor = _upsert(
-            existing_dims.get("dim_disponibilidade_horaria"),
-            matched.select("descricao_horario", "id_tipo_disp"),
-            ["descricao_horario", "id_tipo_disp"],
-            "id_horario",
-            key_mode,
+        dim_hor = out["dim_disponibilidade_horaria"] = _localize(
+            _upsert(
+                existing_dims.get("dim_disponibilidade_horaria"),
+                matched.select("descricao_horario", "id_tipo_disp"),
+                ["descricao_horario", "id_tipo_disp"],
+                "id_horario",
+                key_mode,
+            )
         )
-        out["dim_disponibilidade_horaria"] = dim_hor
         long = unpivot_availability(valid, ID_INQ, disp_cols, var_name="orig")
         long = long.join(F.broadcast(matched), on="orig")
         # null-safe: id_tipo_disp is NULL for headers without a matching

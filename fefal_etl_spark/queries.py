@@ -197,12 +197,10 @@ def _memoized(name: str, fn: QueryFn) -> QueryFn:
 
     @functools.wraps(fn)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (
-            spark.sparkContext.applicationId,
-            name,
-            os.path.abspath(sf_dir),
-            _dir_fingerprint(sf_dir),
-        )
+        fp = _dir_fingerprint(sf_dir)
+        if fp is None:  # unreadable dir: no key can tell its states apart
+            return fn(spark, sf_dir)
+        key = (spark.sparkContext.applicationId, name, os.path.abspath(sf_dir), fp)
         hit = _PLAN_MEMO.get(key)
         if hit is not None:
             df, persists = hit
@@ -237,18 +235,17 @@ _ORDERS_MAX_MEMO: dict = {}
 
 
 def _orders_max_key(spark: SparkSession, sf_dir: str) -> int:
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        _dir_fingerprint(sf_dir),
-    )
+    fp = _dir_fingerprint(sf_dir)
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), fp)
     v = _ORDERS_MAX_MEMO.get(key)
     if v is None:
-        v = _ORDERS_MAX_MEMO[key] = (
+        v = (
             load_table(spark, sf_dir, "orders")
             .agg(F.max("o_orderkey").alias("m"))
             .collect()[0]["m"]
         )
+        if fp is not None:  # never cache under an unreadable dir's key
+            _ORDERS_MAX_MEMO[key] = v
     return v
 
 

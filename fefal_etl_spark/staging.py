@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import shutil
 import tempfile
 import time
@@ -53,6 +54,11 @@ def record_build_seconds(name: str, seconds: float) -> None:
 
 def build_seconds_total() -> float:
     return sum(_BUILD_SECONDS.values())
+
+
+# a session-scoped staged dir ends in "-s" + 8 hex digits of its
+# application id (see stage_table); nothing else may be age-swept
+_SESSION_SUFFIX = re.compile(r"-s[0-9a-f]{8}$")
 
 
 def staging_root() -> str:
@@ -121,7 +127,9 @@ def stage_table(
     process rebuilds it inside its own first (timed) invocation —
     cross-run precomputation of a declared-whole-corpus query would
     flatter the bench without optimizing anything. Session-scoped
-    leftovers from dead sessions are age-swept opportunistically."""
+    leftovers from dead sessions are age-swept opportunistically; every
+    hit refreshes the staged dir's mtime, so the sweep's age test only
+    ever sees sessions that stopped using their staging."""
     if scope == "session":
         app = hashlib.md5(
             spark.sparkContext.applicationId.encode()
@@ -134,7 +142,7 @@ def stage_table(
         for d in os.listdir(root):
             if (
                 d.startswith(f"{name}-")
-                and "-s" in d
+                and _SESSION_SUFFIX.search(d)
                 and not d.endswith(f"-s{app}")
                 and ".tmp-" not in d
             ):
@@ -145,7 +153,13 @@ def stage_table(
                 except OSError:
                     continue
     final = os.path.join(staging_root(), f"{name}-{fingerprint}")
-    if not os.path.exists(os.path.join(final, "_SUCCESS")):
+    if os.path.exists(os.path.join(final, "_SUCCESS")):
+        # a hit keeps the dir young for the session sweep above
+        try:
+            os.utime(final)
+        except OSError:
+            pass
+    else:
         # A final dir without _SUCCESS is debris from a crashed publisher
         # under the OLD non-atomic scheme or a partial copy — clear it so
         # the rename can land. (Atomic rename means current-version crashes

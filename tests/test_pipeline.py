@@ -1,12 +1,18 @@
 """End-to-end pipeline + star-schema tests on the FIXTURES.md survey shape
 (all five column groups, every reference branch exercised)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from fefal_etl_spark.datasets import DEFAULT_SF_DIR
 from fefal_etl_spark.plans.config import GroupSpec, PipelineConfig
 from fefal_etl_spark.plans.pipeline import run_pipeline
 from fefal_etl_spark.plans.star import build_star
+
+# the smallest generated TPC-H-style scale, beside the default one
+SF_DIR = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
 
 COLS = [
     # identificacao (1-8)
@@ -45,10 +51,9 @@ ROWS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def config():
+def _config(year: int = 2025) -> PipelineConfig:
     return PipelineConfig(
-        year=2025,
+        year=year,
         groups={
             "identificacao": GroupSpec(1, 8),
             "formacoes": GroupSpec(9, 10),
@@ -71,20 +76,33 @@ def config():
 
 
 @pytest.fixture(scope="module")
-def fixtures(spark, config):
-    survey = spark.createDataFrame(
-        [tuple(r) for r in ROWS], ", ".join(f"`{c}` string" for c in COLS)
+def config():
+    return _config()
+
+
+def _survey(spark, cols=COLS, rows=ROWS):
+    return spark.createDataFrame(
+        [tuple(r) for r in rows], ", ".join(f"`{c}` string" for c in cols)
     )
-    registry = spark.createDataFrame(
-        [(1, "Aveiro", "Municípios"), (2, "Braga", "Freguesias")],
-        "id_entidades int, ent_nome string, ent_tipo string",
-    )
-    tipos = spark.createDataFrame(
+
+
+def _tipos(spark):
+    return spark.createDataFrame(
         [(1, "Presencial"), (2, "Online")],
         "id_tipo_disp int, descricao_tipo_disp string",
     )
+
+
+REGISTRY_ROWS = [(1, "Aveiro", "Municípios"), (2, "Braga", "Freguesias")]
+REGISTRY_SCHEMA = "id_entidades int, ent_nome string, ent_tipo string"
+
+
+@pytest.fixture(scope="module")
+def fixtures(spark, config):
+    survey = _survey(spark)
+    registry = spark.createDataFrame(REGISTRY_ROWS, REGISTRY_SCHEMA)
+    tipos = _tipos(spark)
     result = run_pipeline(survey, registry, config)
-    result.frame.cache()
     star = build_star(result, tipos_disponibilidades=tipos, key_mode="sequential")
     return result, star
 
@@ -227,45 +245,306 @@ def test_upsert_idempotent_with_null_keys(spark):
 
 def test_shared_cache_keyed_by_application_id(spark):
     """Two-sequential-sessions simulation (VERDICT r2 item 5): entries keyed
-    by a DEAD application id must be evicted (and their frames unpersisted)
-    the first time a new application populates the cache — id(spark) reuse
-    after GC can no longer serve a stale persisted frame."""
+    by a DEAD application id must be evicted (their star frames unpersisted,
+    their classified frame's checkpoint released) the first time a new
+    application populates the cache — id(spark) reuse after GC can no
+    longer serve a stale persisted frame."""
     from types import SimpleNamespace
 
+    from fefal_etl_spark.cache import keep_checkpoint, local_checkpoint
     from fefal_etl_spark.plans import queries as pq
-    from fefal_etl_spark.plans import star as pstar
 
     pq.release_pipeline_cache()
     app_id = spark.sparkContext.applicationId
 
     released = []
-    dead_frame = SimpleNamespace(unpersist=lambda: released.append("pipeline"))
+    # entries own their checkpoints, as _shared's do
+    dead_frame = keep_checkpoint(local_checkpoint(spark.range(3)))
+    dead_star = SimpleNamespace(unpersist=lambda: released.append("star"))
     pq._SHARED[("dead-app-123", "/some/sf")] = (
         SimpleNamespace(frame=dead_frame),
-        {},
+        {"fact": dead_star},
     )
-    live_star = SimpleNamespace(unpersist=lambda: released.append("BUG-live"))
-    dead_star = SimpleNamespace(unpersist=lambda: released.append("star"))
-    pstar._PERSISTED.append((app_id, live_star))
-    pstar._PERSISTED.append(("dead-app-123", dead_star))
+    live_frame = keep_checkpoint(local_checkpoint(spark.range(4)))
+    live_star = SimpleNamespace(unpersist=lambda: released.append("live"))
+    live_key = (app_id, "/other/sf")
+    pq._SHARED[live_key] = (SimpleNamespace(frame=live_frame), {"fact": live_star})
 
     try:
-        res, star = pq._shared(spark, "/root/testdata/sf0.001")
-        # the dead application's entries are gone and were unpersisted …
+        res, star = pq._shared(spark, SF_DIR)
+        # the dead application's entry is gone and released ...
         assert ("dead-app-123", "/some/sf") not in pq._SHARED
-        assert sorted(released) == ["pipeline", "star"]
-        # … the live application's are intact, and the fresh entry is keyed
+        assert released == ["star"]
+        assert not _blocks_held(dead_frame)
+        # ... the live application's are intact, and the fresh entry is keyed
         # by the real application id
-        assert any(df is live_star for _own, df in pstar._PERSISTED)
-        assert (app_id, "/root/testdata/sf0.001") in pq._SHARED
+        assert pq._SHARED[live_key][1]["fact"] is live_star
+        assert _blocks_held(live_frame) and live_frame.count() == 4
+        assert (app_id, SF_DIR) in pq._SHARED
         # a second lookup is a pure cache hit (same objects back)
-        res2, star2 = pq._shared(spark, "/root/testdata/sf0.001")
+        res2, star2 = pq._shared(spark, SF_DIR)
         assert res2 is res and star2 is star
     finally:
-        pstar._PERSISTED[:] = [
-            (o, d) for o, d in pstar._PERSISTED if d is not live_star
-        ]
         pq.release_pipeline_cache()
+    # the release drops the live entry too: star frame and checkpoint
+    assert released == ["star", "live"]
+    assert not _blocks_held(live_frame)
+
+
+def _blocks_held(df) -> bool:
+    return df._jdf.logicalPlan().rdd().getStorageLevel().useDisk()
+
+
+def test_pipeline_query_runs_again_after_cache_release(spark):
+    """A memoized pipeline query must not hand back a plan over the
+    checkpoint release_pipeline_cache just freed: the second call
+    rebuilds and collects the same rows."""
+    from fefal_etl_spark.plans import queries as pq
+    from fefal_etl_spark.queries import get_queries
+
+    queries = get_queries()
+    pq.release_pipeline_cache()
+    try:
+        # the fact query has no shuffle whose files could mask a freed
+        # checkpoint
+        for name in ("pipeline_status_accounting", "pipeline_fact_inquerito"):
+            first = sorted(queries[name](spark, SF_DIR).collect())
+            pq.release_pipeline_cache()
+            assert sorted(queries[name](spark, SF_DIR).collect()) == first, name
+    finally:
+        pq.release_pipeline_cache()
+
+
+def test_wave_release_keeps_shared_entry_readable(spark):
+    """release_star_cache() after a wave frees that wave's checkpoint only:
+    the pipeline query cache owns its entry's checkpoint, so a later
+    cache hit still reads."""
+    from fefal_etl_spark.plans import queries as pq
+    from fefal_etl_spark.plans.star import release_star_cache
+
+    pq.release_pipeline_cache()
+    try:
+        res, star = pq._shared(spark, SF_DIR)
+        n = star["fact_inquerito"].count()
+        release_star_cache()
+        res2, star2 = pq._shared(spark, SF_DIR)
+        assert res2 is res and _blocks_held(res.frame)
+        assert res2.frame.count() > 0
+        star2["fact_inquerito"].unpersist()  # re-read through the checkpoint
+        assert star2["fact_inquerito"].count() == n
+    finally:
+        pq.release_pipeline_cache()
+
+
+def test_wave_release_leaves_other_threads_waves(spark):
+    """A wave's checkpoint belongs to the thread that ran it: another
+    thread's release_star_cache() must not free it mid-commit."""
+    import threading
+
+    from fefal_etl_spark.cache import local_checkpoint
+    from fefal_etl_spark.plans.star import release_star_cache
+
+    mine = local_checkpoint(spark.range(5))
+    other = threading.Thread(target=release_star_cache)
+    other.start()
+    other.join()
+    try:
+        assert _blocks_held(mine) and mine.count() == 5
+    finally:
+        release_star_cache()
+    assert not _blocks_held(mine)
+
+
+# a second yearly wave: one formation, one interest and one availability
+# header are new, so every dimension gains rows on the re-load
+COLS_W2 = [
+    "Quantos formandos? [Liderança]" if c == "Formação sem brackets"
+    else "Marketing" if c == "Finanças"
+    else "Presencial - [Tarde]" if c == "Presencial - [Manhã]"
+    else c
+    for c in COLS
+]
+ROWS_W2 = [
+    ("Município de Aveiro", "CM", "Ana", "Sim", "70",
+     "2025-01-01 10:00:00", "2025-01-01 10:20:00", None,
+     "4", "6", "Sim", "3", "Sim", "Sim", "Sim", "5"),
+    ("Freguesia de Braga", "Junta", None, "Não", "100",
+     "2025-01-01 10:00:00", "2025-01-01 10:05:00", None,
+     "1", "x", "Não", "Ótimo. Mais sessões!", "Sim", "Não", "Sim", "2"),
+    ("Junta de Braga", "Junta", None, "Sim", "40",
+     None, None, None, "9", "9", "Sim", None, "Sim", "Sim", "Sim", "1"),
+    ("sem dados", "CM", None, None, "10",
+     None, None, None, "1", "1", "Sim", None, "Não", "Sim", "Sim", "1"),
+]
+DIM_IDS = {
+    "dim_formacao": "id_formacao",
+    "dim_grupo_formacao": "id_grupo_formacao",
+    "dim_area_tematica": "id_interesse",
+    "dim_preferencia_ensino": "id_preferencia",
+    "dim_disponibilidade_horaria": "id_horario",
+}
+# per-run surrogate keys of the ingest rows; compared through the facts'
+# other columns instead
+ROW_IDS = {"id_inquerito", "id_resposta_interesse"}
+
+
+def _two_wave_load(spark, root: str) -> dict:
+    """Load two waves into one TransactionalTable per star table (dims
+    merged from the second wave on, facts and rejected rows appended) and
+    return every committed table's rows plus each wave's status counts."""
+    from fefal_etl_spark.plans.star import release_star_cache
+    from fefal_etl_spark.table import TransactionalTable
+
+    registry = spark.createDataFrame(REGISTRY_ROWS, REGISTRY_SCHEMA)
+    tipos = _tipos(spark)
+    tables: dict = {}
+    status = {}
+    for year, cols, rows in ((2025, COLS, ROWS), (2026, COLS_W2, ROWS_W2)):
+        res = run_pipeline(_survey(spark, cols, rows), registry, _config(year))
+        existing = {n: tables[n].read() for n in DIM_IDS if n in tables}
+        star = build_star(res, existing_dims=existing, tipos_disponibilidades=tipos)
+        star["rejeitados"] = res.frame.filter(F.col("status") != "valid").select(
+            "ano", "status", "nome_entidade", "id_entidade"
+        )
+        for name, df in star.items():
+            if name in existing:
+                tables[name].merge(df, keys=[DIM_IDS[name]])
+            else:
+                tables.setdefault(
+                    name, TransactionalTable(spark, f"{root}/{name}")
+                ).append(df)
+        status[year] = {
+            r["status"]: r["count"]
+            for r in res.frame.groupBy("status").count().collect()
+        }
+        release_star_cache()
+    out = {"status": status}
+    for name, t in sorted(tables.items()):
+        df = t.read()
+        cols = sorted(c for c in df.columns if c not in ROW_IDS)
+        out[name] = sorted(
+            [[str(v) for v in r] for r in df.select(*cols).collect()]
+        )
+    return out
+
+
+# The two-wave load as the lazy build (persisted valid branch,
+# Python-pickled lookup frames, dims recomputed per consumer) committed it.
+TWO_WAVE = {
+    "status": {
+        2025: {"blank_name": 1, "duplicate": 1, "unmatched": 1, "valid": 2},
+        2026: {"blank_name": 1, "unmatched": 1, "valid": 2},
+    },
+    "comentario": [["Interessante."], ["Queremos mais!"]],
+    "dim_area_tematica": [["1", "financas"], ["2", "gestao"], ["3", "marketing"]],
+    "dim_disponibilidade_horaria": [
+        ["Manhã", "1", "1"], ["Pós-laboral", "2", "2"], ["Tarde", "3", "1"],
+    ],
+    "dim_formacao": [
+        ["1", "None", "None", "excel avancado"],
+        ["2", "None", "None", "formacao sem brackets"],
+        ["3", "None", "None", "lideranca"],
+    ],
+    "dim_grupo_formacao": [],
+    "dim_preferencia_ensino": [["prefere e-learning (1-5)", "1"]],
+    "fact_inquerito": [
+        ["2025", "2024-01-01", "1", "2", "Eva", "100", "3600"],
+        ["2025", "2024-01-02", "0", "1", "Rui", "90", "None"],
+        ["2026", "2025-01-01", "0", "2", "None", "100", "300"],
+        ["2026", "2025-01-01", "1", "1", "Ana", "70", "1200"],
+    ],
+    "fact_resposta_disponibilidade": [
+        ["1", "-1"], ["1", "1"], ["2", "-1"], ["2", "1"],
+        ["2", "1"], ["2", "1"], ["3", "0"], ["3", "1"],
+    ],
+    "fact_resposta_formacao": [
+        ["1", "0"], ["1", "0"], ["1", "1"], ["1", "4"],
+        ["2", "0"], ["2", "2"], ["3", "0"], ["3", "6"],
+    ],
+    "fact_resposta_interesse": [
+        ["1", "1", "1"], ["1", "1", "1"], ["2", "1", "1"],
+        ["2", "3", "1"], ["3", "1", "1"], ["3", "1", "1"],
+    ],
+    "fact_resposta_preferencia": [["1", "2"], ["1", "3"], ["1", "5"]],
+    "rejeitados": [
+        ["2025", "1", "Município de Aveiro", "duplicate"],
+        ["2025", "None", "Entidade Fantasma", "unmatched"],
+        ["2025", "None", "nd", "blank_name"],
+        ["2026", "None", "Junta de Braga", "unmatched"],
+        ["2026", "None", "sem dados", "blank_name"],
+    ],
+}
+
+
+def test_two_wave_load_keeps_rows_ids_and_counts(spark, tmp_path):
+    """Materializing the wave and localizing the dims changes no committed
+    row, dim id or status count of a two-wave load."""
+    assert _two_wave_load(spark, str(tmp_path)) == TWO_WAVE
+
+
+def _final_plan(df) -> str:
+    df.collect()  # an adaptive plan prints its final form once run
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_star_small_frames_are_local_relations(spark, config):
+    """The header→name lookups, the dims, the empty group dim and the
+    availability header→tipo match run as LocalTableScans; the one RDD
+    scan left in a fact is the wave run_pipeline materialized."""
+    from fefal_etl_spark.plans.star import release_star_cache
+
+    registry = spark.createDataFrame(REGISTRY_ROWS, REGISTRY_SCHEMA)
+    result = run_pipeline(_survey(spark), registry, config)
+    star = build_star(result, tipos_disponibilidades=_tipos(spark))
+    try:
+        for name, df in star.items():
+            plan = _final_plan(df)
+            if name.startswith("dim_"):
+                assert "LocalTableScan" in plan, name
+                assert "ExistingRDD" not in plan, (name, plan)
+            else:
+                assert plan.count("Scan ExistingRDD") == 1, (name, plan)
+                if name != "fact_inquerito":
+                    assert "LocalTableScan" in plan, name
+    finally:
+        release_star_cache()
+
+
+def test_wave_commit_scans_registry_once(spark, config, tmp_path):
+    """Committing every star table of one wave, plus its rejected rows,
+    scans the registry once: the registry is a one-partition RDD that
+    counts its evaluations by the tasks of the wave's job group."""
+    from pyspark import TaskContext
+
+    from fefal_etl_spark.plans.star import release_star_cache
+    from fefal_etl_spark.table import TransactionalTable
+
+    sc = spark.sparkContext
+    group = "registry-scans"
+    scans = sc.accumulator(0)
+
+    def counted(rows):
+        if TaskContext.get().getLocalProperty("spark.jobGroup.id") == group:
+            scans.add(1)
+        yield from rows
+
+    registry = spark.createDataFrame(
+        sc.parallelize(REGISTRY_ROWS, 1).mapPartitions(counted), REGISTRY_SCHEMA
+    )
+    sc.setJobGroup(group, "one survey wave, committed")
+    try:
+        result = run_pipeline(_survey(spark), registry, config)
+        star = build_star(result, tipos_disponibilidades=_tipos(spark))
+        star["rejeitados"] = result.frame.filter(F.col("status") != "valid")
+        for name, df in star.items():
+            TransactionalTable(spark, str(tmp_path / name)).append(df)
+        release_star_cache()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) >= len(star)  # every commit ran inside the group
+    assert scans.value == 1
 
 
 def test_from_mongo_docs_imports_reference_shapes(tmp_path):

@@ -104,6 +104,94 @@ def test_stage_table_lost_race_uses_winner(spark, tmp_path, monkeypatch):
     assert leftovers == []  # loser cleaned up
 
 
+def test_stage_hit_refreshes_mtime(spark, tmp_path, monkeypatch):
+    """A staging hit — through stage_table or stage_parquet's read memo —
+    touches the staged dir, so a session older than the 6 h sweep age
+    that keeps using its staging is never swept by another session."""
+    import time
+
+    from fefal_etl_spark.staging import stage_parquet, stage_table
+
+    monkeypatch.setenv("FEFAL_STAGE_DIR", str(tmp_path / "stage"))
+    old = time.time() - 7 * 3600
+
+    def write(p):
+        spark.range(3).write.mode("overwrite").parquet(p)
+
+    p = stage_table(spark, "hit", "fp", write, scope="session")
+    os.utime(p, (old, old))
+    assert stage_table(spark, "hit", "fp", write, scope="session") == p
+    assert os.path.getmtime(p) > old + 3600
+
+    first = stage_parquet(spark, "memo", "fp", spark.range(4), scope="session")
+    path = first.inputFiles()[0].removeprefix("file:").rsplit("/", 1)[0]
+    os.utime(path, (old, old))
+    again = stage_parquet(spark, "memo", "fp", spark.range(4), scope="session")
+    assert again is first  # the read-memo path ...
+    assert os.path.getmtime(path) > old + 3600  # ... refreshed it too
+
+
+def test_session_sweep_matches_suffix_structurally(spark, tmp_path, monkeypatch):
+    """The session sweep deletes only dirs ending in another session's
+    ``-s<8 hex>`` suffix — not a store-scoped dir whose name merely
+    contains ``-s``."""
+    import time
+
+    from fefal_etl_spark.staging import stage_table
+
+    root = tmp_path / "stage"
+    monkeypatch.setenv("FEFAL_STAGE_DIR", str(root))
+    old = time.time() - 7 * 3600
+    dead_session = root / "sw-fp-s0123abcd"
+    store_scoped = root / "sw-my-store-state"
+    for d in (dead_session, store_scoped):
+        d.mkdir(parents=True)
+        (d / "_SUCCESS").touch()
+        os.utime(d, (old, old))
+
+    stage_table(
+        spark, "sw", "fp",
+        lambda p: spark.range(1).write.mode("overwrite").parquet(p),
+        scope="session",
+    )
+    assert not dead_session.exists()
+    assert store_scoped.exists()
+
+
+def test_memos_skip_failed_fingerprint(spark, tmp_path, monkeypatch):
+    """When the source dir cannot be fingerprinted, the plan memo and the
+    max(o_orderkey) memo must collect fresh on every call instead of
+    caching under a ``None`` key every later dir state would share."""
+    import fefal_etl_spark.queries as q
+
+    sf = str(tmp_path)
+    loads = []
+
+    def counting_load(spark_, sf_dir, name):
+        loads.append(name)
+        return spark_.createDataFrame([(3,), (7,)], "o_orderkey long")
+
+    monkeypatch.setattr(q, "load_table", counting_load)
+    monkeypatch.setattr(q, "_dir_fingerprint", lambda _d: None)
+    monkeypatch.setattr(q, "_ORDERS_MAX_MEMO", {})
+    assert q._orders_max_key(spark, sf) == q._orders_max_key(spark, sf) == 7
+    assert loads == ["orders", "orders"]  # two fresh collects
+    assert q._ORDERS_MAX_MEMO == {}
+
+    calls = []
+
+    def build(spark_, sf_dir):
+        calls.append(sf_dir)
+        return spark_.range(1)
+
+    name = sorted(q.PLAN_MEMOIZABLE)[0]
+    memo = q._memoized(name, build)
+    monkeypatch.setattr(q, "_PLAN_MEMO", {})
+    memo(spark, sf)
+    memo(spark, sf)
+    assert len(calls) == 2 and q._PLAN_MEMO == {}
+
+
 def test_query_inventory_up_to_date():
     """docs/QUERIES.md must match what tools/gen_query_inventory.py would
     generate right now (VERDICT r4 item 8: the operator→query→last-
