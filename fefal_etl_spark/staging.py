@@ -42,9 +42,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 # Wall-clock seconds spent BUILDING staged tables / scenarios in this
 # process, keyed by staged name ("scenario:<name>" for _txn_scenario
-# builds). bench.py snapshots the running total around each cold
-# invocation so one-time build cost is attributable separately from
-# first-execution cost (VERDICT r12 "own the cold number").
+# builds). perfbench snapshots the running total around a session's
+# first query calls and reports the difference as `staging.build_s`,
+# so one-time build cost is attributable separately from
+# first-execution cost.
 _BUILD_SECONDS: dict[str, float] = {}
 
 

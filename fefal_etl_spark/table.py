@@ -45,6 +45,7 @@ import json
 import os
 import re
 import shutil
+import time
 import uuid
 from dataclasses import dataclass
 
@@ -1639,9 +1640,11 @@ class TransactionalTable:
             target, json.dumps(payload).encode()
         )
 
-    def _publish(self, manifest: dict, version: int) -> bool:
-        """Steps 2-3 of the protocol, for the commit record."""
-        return self._publish_json(manifest, self._manifest_path(version))
+    def _publish(self, payload: str, version: int) -> bool:
+        """Steps 2-3 of the protocol, for the serialized commit record."""
+        return self.backend.put_if_absent(
+            self._manifest_path(version), payload.encode()
+        )
 
     def _write_checkpoint(self, version: int, state: dict) -> None:
         """Write ``version``'s full-state checkpoint plus the
@@ -1695,7 +1698,12 @@ class TransactionalTable:
                         c: {f: b for f, b in m.items() if f in cs}
                         for c, m in blooms.items()
                     }
-                    part["blooms"] = {c: m for c, m in pb.items() if m}
+                    # part 0 keeps every built column, even one whose
+                    # files all left (its map is empty): replay keeps
+                    # the declaration, so the checkpoint must too
+                    part["blooms"] = (
+                        pb if k == 0 else {c: m for c, m in pb.items() if m}
+                    )
                     self._publish_json(
                         part,
                         os.path.join(
@@ -1760,33 +1768,20 @@ class TransactionalTable:
                     f"{op}: base version {base_version} is stale "
                     f"(latest is {latest})"
                 )
-            parent = self._read_manifest(latest) if latest is not None else None
-            txns = dict(parent.txns or {}) if parent else {}
+            parent_state = parent = None
+            if latest is not None:
+                parent_state = self._resolve_state(latest)
+                parent = self._to_manifest(parent_state)
             if txn is not None:
                 app_id, txn_version = txn
-                if app_id in txns and txns[app_id] >= txn_version:
+                done = ((parent.txns or {}) if parent else {}).get(app_id)
+                if done is not None and done >= txn_version:
                     return None  # already applied — idempotent skip
-                txns[app_id] = txn_version
             version = 0 if latest is None else latest + 1
             all_files = list(files)
-            all_stats = dict(stats or {})
-            all_parts = {
-                f: pv for f in files if (pv := self._partition_values(f))
-            }
             all_dvs = list(dv_files or [])
             if carry_parent_files and parent is not None:
                 all_files = parent.files + all_files
-                pf = set(parent.files)
-                carried = {
-                    f: s for f, s in (parent.stats or {}).items() if f in pf
-                }
-                all_stats = {**carried, **all_stats}
-                carried_parts = {
-                    f: p
-                    for f, p in (parent.partitions or {}).items()
-                    if f in pf
-                }
-                all_parts = {**carried_parts, **all_parts}
                 # deletion vectors address parent files by position, so
                 # they ride along with the files they mask (CoW rewrites
                 # don't carry parent files — their staged rows already
@@ -1838,14 +1833,16 @@ class TransactionalTable:
                 # reaching here means the ledger did NOT already cover
                 # this (app_id, version) — record just the new entry
                 manifest["txn"] = list(txn)
+            # stats and partition values are recorded for ADDED files
+            # only: retained files keep their parent entries on replay
             add_set = set(add)
             rec_stats = {
-                f: s for f, s in all_stats.items() if f in add_set
+                f: s for f, s in (stats or {}).items() if f in add_set
             }
             if rec_stats:
                 manifest["stats"] = rec_stats
             rec_parts = {
-                f: p for f, p in all_parts.items() if f in add_set
+                f: pv for f in add if (pv := self._partition_values(f))
             }
             if rec_parts:
                 manifest["partitions"] = rec_parts
@@ -1856,45 +1853,35 @@ class TransactionalTable:
                 manifest["dv_add"] = dv_add
             if dv_remove:
                 manifest["dv_remove"] = dv_remove
-            # governance rides EVERY commit (like the txn ledger): the
-            # schema record is the union of parent's and this write's
-            # columns; constraints only grow. The type check RE-RUNS
-            # here against the (possibly rebased) parent: two appends
-            # that each add the same NEW column with different types
-            # both pass _enforce against the old base, and without this
-            # in-loop check the rebase would record a type the other
-            # writer's parquet files contradict.
-            all_schema = dict(parent.schema or {}) if parent else {}
-            if schema:
-                for name_, typ_ in schema.items():
-                    old_ = all_schema.get(name_)
-                    if old_ is not None and old_ != typ_:
-                        if widens(old_, typ_):
-                            continue  # widening evolves, like _enforce
-                        if widens(typ_, old_):
-                            # a CONCURRENT commit already widened this
-                            # column past the write's type: the staged
-                            # narrow files still read correctly under
-                            # the wider recorded type — keep it
-                            schema[name_] = old_
-                            continue
-                        raise SchemaConflict(
-                            f"column {name_!r} is {old_} in {self.root} "
-                            f"(committed while this write was in flight) "
-                            f"but the write declares {typ_}"
-                        )
-                all_schema.update(schema)
-            all_constraints = (
-                list(parent.constraints or []) if parent else []
-            )
-            if constraint is not None:
-                all_constraints.append(constraint)
+            # The type check RE-RUNS here against the (possibly
+            # rebased) parent: two appends that each add the same NEW
+            # column with different types both pass _enforce against
+            # the old base, and without this in-loop check the rebase
+            # would record a type the other writer's parquet files
+            # contradict.
+            parent_schema = (parent.schema or {}) if parent else {}
+            for name_, typ_ in (schema or {}).items():
+                old_ = parent_schema.get(name_)
+                if old_ is not None and old_ != typ_:
+                    if widens(old_, typ_):
+                        continue  # widening evolves, like _enforce
+                    if widens(typ_, old_):
+                        # a CONCURRENT commit already widened this
+                        # column past the write's type: the staged
+                        # narrow files still read correctly under the
+                        # wider recorded type — keep it
+                        schema[name_] = old_
+                        continue
+                    raise SchemaConflict(
+                        f"column {name_!r} is {old_} in {self.root} "
+                        f"(committed while this write was in flight) "
+                        f"but the write declares {typ_}"
+                    )
             # A REBASED commit re-validates its column set against the
             # CURRENT parent's retired names: an interleaved
             # drop_column/rename_column would otherwise let this write
             # re-register a retired name — whose data every read then
-            # silently drops/renames away (the type check below re-runs
-            # in-loop for the same reason; constraint re-validation
+            # silently drops/renames away (constraint re-validation
             # stays on the documented relaxed model — it needs a data
             # pass, not a metadata read).
             parent_retired = retired_names(
@@ -1909,13 +1896,15 @@ class TransactionalTable:
                     f"rename/drop committed while this write was in "
                     f"flight in {self.root}"
                 )
-            # record only the schema DELTA (new columns / first record);
-            # replay unions them forward exactly as the absolute form did
-            parent_schema = (parent.schema or {}) if parent else {}
+            # record the schema DELTA: new or retyped columns, plus any
+            # name a narrowing overwrite took out of the LIVE set —
+            # replay grows the live set by exactly the delta's names,
+            # so a re-declared dead column must ride it to come back
+            parent_live = (parent.declared_schema or {}) if parent else {}
             schema_delta = {
                 k: v
                 for k, v in (schema or {}).items()
-                if parent_schema.get(k) != v
+                if parent_schema.get(k) != v or k not in parent_live
             }
             if schema_delta:
                 manifest["schema"] = schema_delta
@@ -1946,124 +1935,16 @@ class TransactionalTable:
                     gen_delta[col_] = expr_
             if gen_delta:
                 manifest["generated"] = gen_delta
-            all_generated = {**parent_gen, **gen_delta}
-            all_column_ops = (
-                list(parent.column_ops or []) if parent else []
-            )
             if column_op is not None:
                 manifest["column_op"] = list(column_op)
-                all_column_ops.append(list(column_op))
-            # resolved full state (for the snapshot cache + checkpoint):
-            # blooms carry like stats — entries for dropped files prune
-            all_blooms: dict[str, dict] = {}
-            if parent and parent.blooms:
-                all_blooms = {
-                    c: {f: b for f, b in m.items() if f in new_set}
-                    for c, m in parent.blooms.items()
-                }
-            for c_, m_ in (blooms or {}).items():
-                all_blooms.setdefault(c_, {}).update(m_)
-            all_blooms = {c: m for c, m in all_blooms.items() if m}
-            import time as _time
-
-            manifest["ts"] = _time.time()
-            if self._publish(manifest, version):
-                state_stats = {
-                    f: s for f, s in all_stats.items() if f in new_set
-                }
-                state_parts = {
-                    f: p for f, p in all_parts.items() if f in new_set
-                }
-                # RETAINED files a non-carry op didn't restage (a
-                # rebased merge/compact keeps interleaved appended
-                # files verbatim) keep their parent stats/partition
-                # values: without this carry the cached state — and any
-                # checkpoint cut from it — silently forgets them, and
-                # the files become unprunable forever after (replay
-                # from the commit records still had them, so cache and
-                # replay disagreed)
-                if parent is not None and not carry_parent_files:
-                    for f in all_files:
-                        if f not in state_stats and f in (parent.stats or {}):
-                            state_stats[f] = parent.stats[f]
-                        if f not in state_parts and f in (
-                            parent.partitions or {}
-                        ):
-                            state_parts[f] = parent.partitions[f]
-                state_schema, state_blooms = all_schema, all_blooms
-                # LIVE declared set — cache and replay must agree
-                # (same rules as _apply_record): replace on overwrite,
-                # grow by this commit's new names otherwise
-                if schema_replace:
-                    state_live = list((schema or {}).keys())
-                else:
-                    parent_live = parent.live_cols if parent else None
-                    state_live = (
-                        list(parent_live)
-                        if parent_live is not None
-                        else list(
-                            (parent.schema or {}).keys()
-                        ) if parent else []
-                    )
-                    state_live += [
-                        k for k in (schema or {}) if k not in state_live
-                    ]
-                if column_op is not None:
-                    state_schema, state_stats, state_blooms = (
-                        _apply_col_op_to_meta(
-                            list(column_op),
-                            dict(state_schema),
-                            state_stats,
-                            dict(state_blooms),
-                        )
-                    )
-                    cop = list(column_op)
-                    if cop[0] == "rename":
-                        state_live = [
-                            cop[2] if c == cop[1] else c
-                            for c in state_live
-                        ]
-                    else:  # drop
-                        state_live = [
-                            c for c in state_live if c != cop[1]
-                        ]
-                state = {
-                    "version": version,
-                    "op": op,
-                    "parent": latest,
-                    "ts": manifest["ts"],
-                    "files": all_files,
-                    "stats": state_stats,
-                    "partitions": state_parts,
-                    "dv_files": all_dvs,
-                    "txns": txns,
-                    "schema": state_schema,
-                    "constraints": all_constraints,
-                    "blooms": state_blooms,
-                    "generated": all_generated,
-                    "column_ops": all_column_ops,
-                    # the declared spec carries forward (round 9) —
-                    # cache and replay must agree, like stats above
-                    "partition_spec": (
-                        partition_spec
-                        if partition_spec is not _UNSET
-                        else (parent.partition_spec if parent else None)
-                    ),
-                    "clustering": (
-                        clustering
-                        if clustering is not _UNSET
-                        else (parent.clustering if parent else None)
-                    ),
-                    "properties": {
-                        k: v
-                        for k, v in {
-                            **((parent.properties or {}) if parent else {}),
-                            **(properties or {}),
-                        }.items()
-                        if v is not None
-                    },
-                    "live_cols": state_live,
-                }
+            manifest["ts"] = time.time()
+            payload = json.dumps(manifest)
+            if self._publish(payload, version):
+                # the record is the whole truth: the cached state and
+                # any checkpoint cut from it are the parent replayed
+                # through the record AS PUBLISHED — exactly what every
+                # other handle resolves
+                state = _apply_record(parent_state, json.loads(payload))
                 self._cache_state(version, state)
                 if (
                     version > 0
@@ -4494,6 +4375,7 @@ class TransactionalTable:
         not a data rewrite."""
         mf = self._read_manifest(version)
         base = self.latest_version()
+        cur = self._read_manifest(base)
         kept = set(mf.files)
         stats = {
             f: s for f, s in (mf.stats or {}).items() if f in kept
@@ -4506,6 +4388,10 @@ class TransactionalTable:
             c: {f: b for f, b in m.items() if f in kept}
             for c, m in (mf.blooms or {}).items()
         }
+        # metadata ops survive the restore, so re-recorded entries take
+        # the names of the ops committed after ``version``
+        for op_ in (cur.column_ops or [])[len(mf.column_ops or []):]:
+            _, stats, blooms = _apply_col_op_to_meta(op_, {}, stats, blooms)
         blooms = {c: m for c, m in blooms.items() if m}
         return self._commit(
             mf.files,
@@ -4525,12 +4411,7 @@ class TransactionalTable:
             partition_spec=mf.partition_spec,
             clustering=mf.clustering,
             properties={
-                **{
-                    k: None
-                    for k in (
-                        self._read_manifest(base).properties or {}
-                    )
-                },
+                **{k: None for k in (cur.properties or {})},
                 **(mf.properties or {}),
             } or None,
         )
@@ -4551,8 +4432,6 @@ class TransactionalTable:
         at missing files. The default 0 is fine for single-writer
         maintenance; run concurrent-writer vacuums with an age well
         above the longest expected stage-to-publish window."""
-        import time as _time
-
         vs = self.versions()
         keep = vs[-keep_versions:] if keep_versions > 0 else []
         live: set[str] = set()
@@ -4589,7 +4468,7 @@ class TransactionalTable:
                     f"did not land; log left untrimmed"
                 )
         removed = []
-        now = _time.time()
+        now = time.time()
         for d in os.listdir(self._data_dir):
             full = os.path.join(self._data_dir, d)
             if d in live:
