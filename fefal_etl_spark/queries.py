@@ -3650,8 +3650,6 @@ def q_pruned_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``carried_ok`` pins that the delete carried files by reference
     (pre-r7 every surviving row was re-staged). The oracle replays the
     survivors declaratively."""
-    from fefal_etl_spark.predicate_prune import prune_candidates
-
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -3664,15 +3662,13 @@ def q_pruned_delete_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _txn_scenario(
         spark, sf_dir, "txn_pruned_del", build, final_version=1
     )
-    mf0 = t._read_manifest(0)
-    cand = prune_candidates(
-        f"o_orderkey <= {thr}",
-        mf0.files,
-        mf0.stats or {},
-        mf0.partitions or {},
+    kept, total = t.pruned_predicate_files(
+        f"o_orderkey <= {thr}", version=0
     )
-    pruned = cand is not None and 0 < len(cand) < len(mf0.files)
-    carried = bool(set(mf0.files) & set(t._read_manifest(1).files))
+    pruned = 0 < kept < total
+    carried = bool(
+        set(t._read_manifest(0).files) & set(t._read_manifest(1).files)
+    )
     return (
         t.read()
         .groupBy("o_orderstatus")
@@ -3714,8 +3710,6 @@ def q_pruned_null_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``pruned_ok`` pins that the candidate list excluded files whose
     footers record zero nulls (pre-r8 every IS NULL predicate scanned
     the whole table). The oracle replays the survivors declaratively."""
-    from fefal_etl_spark.predicate_prune import prune_candidates
-
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
@@ -3733,11 +3727,8 @@ def q_pruned_null_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _txn_scenario(
         spark, sf_dir, "txn_null_del", build, final_version=1
     )
-    mf0 = t._read_manifest(0)
-    cand = prune_candidates(
-        "clerk IS NULL", mf0.files, mf0.stats or {}, mf0.partitions or {}
-    )
-    pruned = cand is not None and 0 < len(cand) < len(mf0.files)
+    kept, total = t.pruned_predicate_files("clerk IS NULL", version=0)
+    pruned = 0 < kept < total
     return (
         t.read()
         .groupBy("o_orderstatus")

@@ -51,6 +51,12 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fefal_etl_spark.predicate_prune import (
+    covered_files,
+    prune_candidates,
+    render_predicate,
+)
+
 _MANIFEST_RE = re.compile(r"^manifest-(\d+)\.json$")
 
 #: footer-inferred parquet schema per (table root, commit dir) — commit
@@ -965,188 +971,93 @@ class TransactionalTable:
         )
 
     def read_partition(self, version: int | None = None, **filters) -> DataFrame:
-        """Partition pruning from the MANIFEST (zero storage listing,
-        like Delta: partition values live in the log): keep only files
-        whose recorded ``col=value`` matches every equality filter, then
-        apply the residual row filter (files without a recorded value
-        for a filtered column are conservatively kept — the residual
-        filter preserves correctness)."""
-        from pyspark.sql import functions as F
-
-        from fefal_etl_spark.predicate_prune import hive_partition_value
-
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        mf = self._read_manifest(v)
-        parts = mf.partitions or {}
-        keep = []
-        for f in mf.files:
-            vals = parts.get(f) or {}
-            if all(
-                c not in vals or vals[c] == hive_partition_value(val)
-                for c, val in filters.items()
-            ):
-                keep.append(f)
-        if not keep:
-            base = self.read(v)
-            return base.filter(F.lit(False))
-        df = self._read_files(
-            keep, dv_files=mf.dv_files, column_ops=mf.column_ops,
-            recorded_schema=mf.declared_schema,
+        """Partition pruning: :meth:`read_matching` over the equality
+        conjunction of ``filters`` (``c=None`` reads the NULL
+        partition, ``c IS NULL``)."""
+        return self.read_matching(
+            render_predicate([(c, "=", x) for c, x in filters.items()]),
+            version,
         )
-        for c, val in filters.items():
-            df = df.filter(F.col(c) == F.lit(val))
-        return df
 
     def read_partition_in(
         self, col: str, values: list, version: int | None = None
     ) -> DataFrame:
-        """Multi-value partition pruning: one manifest-filtered scan of
-        every file whose recorded ``col`` is in ``values`` (files with
-        no recorded value are conservatively kept), plus the residual
-        ``isin`` row filter — the IN-list form of :meth:`read_partition`
-        in a single read instead of one scan per value."""
-        from pyspark.sql import functions as F
-
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        from fefal_etl_spark.predicate_prune import hive_partition_value
-
-        mf = self._read_manifest(v)
-        parts = mf.partitions or {}
-        wanted = {hive_partition_value(x) for x in values}
-        keep = [
-            f
-            for f in mf.files
-            if (pv := parts.get(f) or {}).get(col) is None
-            or pv[col] in wanted
-        ]
-        if not keep:
-            return self.read(v).filter(F.lit(False))
-        df = self._read_files(
-            keep, dv_files=mf.dv_files, column_ops=mf.column_ops,
-            recorded_schema=mf.declared_schema,
+        """:meth:`read_matching` over ``col IN (values)`` — the IN-list
+        form of :meth:`read_partition` in one scan (a None member also
+        reads the NULL partition)."""
+        return self.read_matching(
+            render_predicate([(col, "in", values)]), version
         )
-        return df.filter(F.col(col).isin(*values))
 
     def pruned_partition_files(
         self, version: int | None = None, **filters
     ) -> tuple[int, int]:
-        """(files_kept, files_total) for a read_partition — auditable
-        pruning, mirror of :meth:`skipped_files`."""
-        from fefal_etl_spark.predicate_prune import hive_partition_value
-
-        v = self.latest_version() if version is None else version
-        mf = self._read_manifest(v)  # type: ignore[arg-type]
-        parts = mf.partitions or {}
-        kept = sum(
-            1
-            for f in mf.files
-            if all(
-                c not in (parts.get(f) or {})
-                or (parts.get(f) or {})[c] == hive_partition_value(val)
-                for c, val in filters.items()
-            )
+        """(files_kept, files_total) for a :meth:`read_partition`."""
+        return self.pruned_predicate_files(
+            render_predicate([(c, "=", x) for c, x in filters.items()]),
+            version,
         )
-        return kept, len(mf.files)
 
     def read_where(self, col: str, lo, hi, version: int | None = None) -> DataFrame:
-        """Stats-based data skipping: read only the files whose manifest
-        [min, max] range for ``col`` intersects [lo, hi], then apply the
-        residual row filter. At 100 TB this is the half of the lakehouse
-        read path partition pruning can't do — skipping WITHIN a
-        partition by per-file stats (Delta/Iceberg data skipping); the
-        manifest carries the stats, so pruning needs zero file IO.
-        Files with no recorded stats for ``col`` are conservatively
-        kept."""
-        from pyspark.sql import functions as F
-
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        mf = self._read_manifest(v)
-        stats = mf.stats or {}
-        keep = []
-        for f in mf.files:
-            rng = (stats.get(f) or {}).get(col)
-            if rng is None or not (rng[1] < lo or rng[0] > hi):
-                keep.append(f)
-        if not keep:
-            # empty result with the right schema: scan one file, filter false
-            base = self.read(v)
-            return base.filter(F.lit(False))
-        df = self._read_files(
-            keep, dv_files=mf.dv_files, column_ops=mf.column_ops,
-            recorded_schema=mf.declared_schema,
+        """Stats-based data skipping: :meth:`read_matching` over
+        ``col BETWEEN lo AND hi``."""
+        return self.read_matching(
+            render_predicate([(col, "between", (lo, hi))]), version
         )
-        return df.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
 
     def read_matching(
         self, condition: str, version: int | None = None
     ) -> DataFrame:
-        """General-predicate read with manifest pruning (round 7 — the
-        read-side twin of the `overwrite_where`/`delete_where`
-        discovery): scan only the files whose stats/partition values
-        say they MAY hold a matching row
-        (`predicate_prune.prune_candidates` — arbitrary AND/OR/NOT/
-        BETWEEN/IN over stats-covered columns, zero file IO to prune),
-        then apply the full predicate as the residual row filter.
-        `read_where` remains the single-column [lo, hi] special case;
-        a predicate outside the skippable subset degrades to a full
-        scan + filter, never a wrong answer."""
+        """The pruned read: scan only the files whose manifest stats,
+        null counts and partition values say they MAY hold a row
+        matching ``condition`` (`predicate_prune.prune_candidates` —
+        AND/OR/NOT/BETWEEN/IN/IS NULL, zero file IO to prune), then
+        apply the full predicate as the residual row filter. At 100 TB
+        this is partition pruning and data skipping WITHIN a partition
+        in one pass (Delta/Iceberg data skipping). A predicate outside
+        the skippable subset degrades to a full scan + filter, never a
+        wrong answer."""
         from pyspark.sql import functions as F
 
-        from fefal_etl_spark.predicate_prune import prune_candidates
-
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        mf = self._read_manifest(v)
-        keep = prune_candidates(
-            condition, mf.files, mf.stats or {}, mf.partitions or {}
+        return self._scan(*self._pruned(condition, version)).filter(
+            F.expr(condition)
         )
-        if keep is None:
-            keep = mf.files
-        if not keep:
-            return self.read(v).filter(F.lit(False))
-        df = self._read_files(
-            keep, dv_files=mf.dv_files, column_ops=mf.column_ops,
-            recorded_schema=mf.declared_schema,
-        )
-        return df.filter(F.expr(condition))
 
     def pruned_predicate_files(
         self, condition: str, version: int | None = None
     ) -> tuple[int, int]:
-        """(files_kept, files_total) for a read_matching — the
-        auditable pruning measure, mirror of :meth:`skipped_files`."""
-        from fefal_etl_spark.predicate_prune import prune_candidates
+        """(files_kept, files_total) for a :meth:`read_matching` — the
+        auditable pruning measure."""
+        _, mf, keep = self._pruned(condition, version)
+        return len(keep), len(mf.files)
 
+    def skipped_files(self, col: str, lo, hi, version: int | None = None) -> tuple[int, int]:
+        """(files_kept, files_total) for a :meth:`read_where`."""
+        return self.pruned_predicate_files(
+            render_predicate([(col, "between", (lo, hi))]), version
+        )
+
+    def _scan(self, v: int, mf: _Manifest, keep: list[str]) -> DataFrame:
+        """Snapshot ``v``'s read of the ``keep`` files (an empty frame of
+        the table's schema when none is kept)."""
+        from pyspark.sql import functions as F
+
+        if not keep:
+            return self.read(v).filter(F.lit(False))
+        return self._read_files(
+            keep, dv_files=mf.dv_files, column_ops=mf.column_ops,
+            recorded_schema=mf.declared_schema,
+        )
+
+    def _pruned(
+        self, condition: str, version: int | None
+    ) -> tuple[int, _Manifest, list[str]]:
+        """(version, snapshot, files that may match) for a pruned read."""
         v = self.latest_version() if version is None else version
         if v is None:
             raise FileNotFoundError(f"no committed version in {self.root}")
         mf = self._read_manifest(v)
-        keep = prune_candidates(
-            condition, mf.files, mf.stats or {}, mf.partitions or {}
-        )
-        kept = len(mf.files) if keep is None else len(keep)
-        return kept, len(mf.files)
-
-    def skipped_files(self, col: str, lo, hi, version: int | None = None) -> tuple[int, int]:
-        """(files_kept, files_total) for a read_where — the auditable
-        data-skipping measure."""
-        v = self.latest_version() if version is None else version
-        mf = self._read_manifest(v)  # type: ignore[arg-type]
-        stats = mf.stats or {}
-        kept = sum(
-            1
-            for f in mf.files
-            if (rng := (stats.get(f) or {}).get(col)) is None
-            or not (rng[1] < lo or rng[0] > hi)
-        )
-        return kept, len(mf.files)
+        return v, mf, self._pruned_candidate_files(mf, condition)
 
     # ------------------------------------------------------------------
     # write side
@@ -1532,18 +1443,16 @@ class TransactionalTable:
         if base is None:
             raise FileNotFoundError(f"no committed version in {self.root}")
         mf = self._read_manifest(base)
-        live = mf.schema or {}
-        retired = retired_names(mf.column_ops)
+        live = mf.declared_schema or {}
         for col in cols:
             if col in live:
                 raise SchemaConflict(
                     f"column {col!r} already exists in {self.root}"
                 )
-            if col in retired:
-                raise SchemaConflict(
-                    f"column name {col!r} was retired by an earlier "
-                    f"rename/drop in {self.root}"
-                )
+        # retired names, and a dead name (taken out of the live set by a
+        # narrowing overwrite) judged by the widening rule of a write
+        # that re-declares it
+        self._check_schema(cols, mf)
         return self._commit(
             [],
             "add-column",
@@ -2177,188 +2086,18 @@ class TransactionalTable:
         )
 
     def overwrite_partition(self, df: DataFrame, **partition_values) -> int:
-        """Atomic partition overwrite (Delta's ``replaceWhere`` on
-        partition equality / Hive's INSERT OVERWRITE PARTITION): one
-        commit whose manifest carries every file NOT in the target
-        partition untouched and swaps the target partition's files for
-        ``df``'s — the daily-reload primitive. At 100 TB, re-loading one
-        day of a year-partitioned fact rewrites 1/365th of the table and
-        flips atomically at the manifest link; readers never see the
-        partition half-replaced.
-
-        ``df`` must NOT contain the partition columns (they are implied
-        by ``partition_values`` and written as hive path segments, like
-        the partitioned :meth:`overwrite`). Files without a recorded
-        value for a partition column are conservatively treated as IN
-        the target (they could hold its rows — keeping them whole would
-        duplicate); since round 8 such MIXED files are REWRITTEN
-        keeping their non-target survivors (pre-r8 they were dropped
-        whole, silently losing their other-partition rows — review
-        finding), so only pure-target hive files are replaced without a
-        scan. Deletion vectors addressing carried files ride along;
-        vectors for replaced/rewritten files become dead entries (they
-        mask nothing — positions address files no longer listed;
-        survivors were staged with the masks applied).
-        CONFLICT NARROWING (Delta's disjoint-predicate acceptance): an
-        interleaved commit no longer conflicts outright — if every file
-        it added or removed lies OUTSIDE the target partition (judged by
-        the hive path segments, conservatively: a file without the
-        partition column in its path counts as inside) and it touched no
-        deletion vectors, this writer REBASES onto it and retries, so
-        two writers overwriting DIFFERENT partitions both commit.
-        Overlapping writers, full rewrites and DV commits still raise
-        ``CommitConflict``."""
-        from pyspark.sql import functions as F
-
+        """Atomic partition overwrite (Hive's INSERT OVERWRITE
+        PARTITION): :meth:`overwrite_where` over the equality predicate
+        of ``partition_values`` (``c=None`` is the NULL partition).
+        ``df`` must NOT contain the partition columns: they are added
+        as literals of the recorded type, so its rows satisfy the
+        predicate by construction and need no validation pass."""
         if not partition_values:
             raise ValueError("overwrite_partition needs partition values")
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-
-        from fefal_etl_spark.predicate_prune import (
-            hive_partition_value,
-            prune_candidates,
-            sql_literal,
+        pred = render_predicate(
+            [(c, "=", v) for c, v in partition_values.items()]
         )
-
-        def in_target(pv: dict) -> bool:
-            return all(
-                pv.get(c) == hive_partition_value(v) or c not in pv
-                for c, v in partition_values.items()
-            )
-
-        # the target region as a skippable predicate: lets the carry
-        # filter (and the conflict walk below) judge LAYOUT-LESS files
-        # by their recorded column stats too — a file whose stats prove
-        # it holds no target-partition rows is carried instead of
-        # swallowed (round 7; pre-r7 any file without the partition
-        # column in its path was conservatively replaced)
-        eq_pred = " AND ".join(
-            f"{c} = {sql_literal(v)}"
-            for c, v in partition_values.items()
-        )
-        staged = self.stage_files(
-            df.select(
-                *[
-                    F.lit(v).alias(c)
-                    for c, v in partition_values.items()
-                ],
-                "*",
-            ),
-            partition_by=list(partition_values.keys()),
-        )
-        sch = self._enforce(df)
-        staged_stats = self._file_stats(staged)
-        # MIXED files (round 8): in-target but not PURE-target — a
-        # layout-less file whose stats cannot disprove target rows, or
-        # a hive file missing one of the filtered partition columns.
-        # Rewrite their non-target SURVIVORS instead of dropping the
-        # file whole (which silently lost its other-partition rows).
-        # Computed once at the initial base: the rebase walk below
-        # only admits interleaved files provably OUTSIDE the target,
-        # which are carried, never mixed.
-        mf0 = self._read_manifest(base)
-        parts0 = mf0.partitions or {}
-        maybe0 = set(
-            prune_candidates(
-                eq_pred, mf0.files, mf0.stats or {}, parts0
-            )
-            or mf0.files
-        )
-
-        def pure_target(f: str) -> bool:
-            pv = parts0.get(f) or {}
-            return all(c in pv for c in partition_values) and in_target(pv)
-
-        mixed = [
-            f
-            for f in mf0.files
-            if f in maybe0
-            and in_target(parts0.get(f) or {})
-            and not pure_target(f)
-        ]
-        staged_mixed: list[str] = []
-        if mixed:
-            survivors = self._read_files(
-                sorted(mixed),
-                dv_files=mf0.dv_files,
-                column_ops=mf0.column_ops,
-            ).filter(~F.coalesce(F.expr(eq_pred), F.lit(False)))
-            staged_mixed = self.stage_files(
-                survivors, partition_by=self._pcols(mf0) or None
-            )
-            staged_stats = {
-                **staged_stats,
-                **self._file_stats(staged_mixed),
-            }
-        staged = staged + staged_mixed
-        while True:
-            mf = self._read_manifest(base)
-            parts = mf.partitions or {}
-            maybe_target = set(
-                prune_candidates(
-                    eq_pred, mf.files, mf.stats or {}, parts
-                )
-                or mf.files
-            )
-            carried = [
-                f
-                for f in mf.files
-                if not in_target(parts.get(f) or {})
-                or f not in maybe_target
-            ]
-            carried_stats = {
-                f: s
-                for f, s in (mf.stats or {}).items()
-                if f in set(carried)
-            }
-            live_dvs = mf.dv_files  # positions on replaced files are inert
-            try:
-                return self._commit(
-                    carried + staged,
-                    "overwrite-partition",
-                    base,
-                    rebase_ok=False,
-                    stats={**carried_stats, **staged_stats},
-                    dv_files=live_dvs,
-                    schema=sch,
-                )
-            except CommitConflict:
-                latest = self.latest_version()
-                assert latest is not None and latest > base
-                # judge interleaved commits with the same predicate:
-                # hive-layout files by path, layout-less appends by
-                # their record's stats (round 7 — a plain append whose
-                # rows provably avoid the target partition no longer
-                # kills the rewrite)
-                for v in range(base + 1, latest + 1):
-                    rec = _load_record(self.root, v, self.backend)
-                    if "files" in rec or rec.get("dv_add") or rec.get(
-                        "dv_remove"
-                    ):
-                        raise  # full-state or DV commit: no narrowing
-                    removed = list(rec.get("remove") or [])
-                    if any(
-                        in_target(self._partition_values(f))
-                        for f in removed
-                    ):
-                        raise  # overlapping partition: real conflict
-                    layoutless = [
-                        f
-                        for f in (rec.get("add") or [])
-                        if in_target(self._partition_values(f))
-                    ]
-                    if layoutless:
-                        cand = prune_candidates(
-                            eq_pred,
-                            layoutless,
-                            rec.get("stats") or {},
-                            rec.get("partitions") or {},
-                        )
-                        if cand is None or cand:
-                            raise  # may hold target rows: real conflict
-                base = latest  # disjoint interleave: rebase and retry
+        return self._replace_where(df, pred, False, partition_values)
 
     def _pruned_candidate_files(
         self, mf: _Manifest, cond_str: str | None
@@ -2366,11 +2105,10 @@ class TransactionalTable:
         """The live files that MAY hold rows matching a predicate —
         `predicate_prune.prune_candidates` over manifest stats +
         partition values for SQL strings (zero file IO), all files
-        otherwise. Shared prologue of every predicate rewrite's
-        discovery (`_hit_files`, the DV delete/update)."""
+        otherwise. Shared by every pruned read (`_pruned`) and every
+        predicate rewrite's discovery (`_hit_files`, the DV
+        delete/update)."""
         if cond_str is not None:
-            from fefal_etl_spark.predicate_prune import prune_candidates
-
             pruned = prune_candidates(
                 cond_str, mf.files, mf.stats or {}, mf.partitions or {}
             )
@@ -2413,30 +2151,34 @@ class TransactionalTable:
                 }
             )
             staged = self.stage_files(out, partition_by=pcols or None)
-        carried_set = set(carried)
-        carried_stats = {
-            f: s for f, s in (mf.stats or {}).items() if f in carried_set
-        }
         return self._commit(
             carried + staged,
             op,
             base,
             rebase_ok=False,
-            stats={**carried_stats, **self._file_stats(staged)},
+            stats=self._file_stats(staged),
             dv_files=mf.dv_files if carried else None,
             blooms=self._auto_blooms(mf, staged),
             cdf=cdf or None,
         )
 
-    def _hit_files(self, mf: _Manifest, condition, cond_str: str | None) -> set[str]:
+    def _hit_files(
+        self,
+        mf: _Manifest,
+        condition,
+        cond_str: str | None,
+        covered: frozenset[str] = frozenset(),
+    ) -> set[str]:
         """The DISTINCT set of live files that CONTAIN rows matching
         ``condition`` — the discovery step every predicate rewrite
-        (``overwrite_where``, ``delete_where``) shares.
+        (``overwrite_where``, ``delete_where``) shares. ``covered``
+        files (every row provably matches) are left out of the scan.
 
         When the predicate arrived as a SQL STRING, the candidate list
         is first pruned against the manifest's per-file [min, max]
-        stats and partition values (`predicate_prune.prune_candidates`
-        — zero file IO, the same metadata `read_where` uses), so at
+        stats, null counts and partition values
+        (`predicate_prune.prune_candidates` — zero file IO, the same
+        metadata `read_matching` uses), so at
         100 TB a replaceWhere touching one day's key range opens only
         the stats-intersecting files instead of scanning the whole
         table to learn which files to rewrite (VERDICT r6 item 2). The
@@ -2444,7 +2186,11 @@ class TransactionalTable:
         without covering metadata fall through to the scan, which
         remains the source of truth. The scan's collect() is
         metadata-scale — one row per matching FILE."""
-        candidates = self._pruned_candidate_files(mf, cond_str)
+        candidates = [
+            f
+            for f in self._pruned_candidate_files(mf, cond_str)
+            if f not in covered
+        ]
         if not candidates:
             return set()
         src = self._read_files(
@@ -2465,31 +2211,47 @@ class TransactionalTable:
     def overwrite_where(
         self, df: DataFrame, condition, validate: bool = True
     ) -> int:
-        """Delta ``replaceWhere`` with an ARBITRARY predicate (round 6 —
-        the r5 layer only had partition-equality `overwrite_partition`):
+        """Delta ``replaceWhere`` with an ARBITRARY predicate:
         atomically replace exactly the rows matching ``condition`` with
-        ``df``'s rows, in one commit.
+        ``df``'s rows, in one commit — the one region replace
+        (:meth:`overwrite_partition` is its partition-equality form).
 
-        ``condition`` is a Column or a SQL string; passing the STRING
-        form additionally lets the hit-file discovery pre-prune its
-        scan list from manifest stats/partition values (see
-        :meth:`_hit_files` — round 7), so discovery cost tracks the
-        replaced region, not the table.
+        ``condition`` is a Column or a SQL string. File-level plan:
+        every file is CARRIED untouched in the manifest unless it may
+        hold a matching row. With the STRING form, manifest metadata
+        (stats, null counts, partition values — zero file IO) first
+        prunes the files that provably hold none and drops whole the
+        files every row of which provably matches
+        (`predicate_prune.covered_files`, e.g. a pure-target hive
+        file: no scan, nothing to restage). One metadata-augmented scan
+        of the remaining files finds those that CONTAIN matching rows
+        (``_metadata.file_path`` — the file list is metadata-scale);
+        they are rewritten keeping their non-matching survivors (NULL
+        predicate keeps the row, SQL DELETE semantics), and ``df``
+        lands as new files under the table's hive layout.
+        ``validate=True`` enforces Delta's replaceWhere contract: every
+        incoming row must satisfy ``condition`` — otherwise the op
+        would smuggle rows outside the replaced region and a re-run
+        would not be idempotent. Deletion vectors on carried files
+        ride along; entries on replaced files become inert.
 
-        File-level plan: one metadata-augmented scan finds the files
-        that actually CONTAIN matching rows (``_metadata.file_path``
-        group-by — the file list is metadata-scale); every other file is
-        CARRIED untouched in the manifest (zero rewrite IO — at 100 TB a
-        predicate touching one day's files rewrites only those), the hit
-        files are rewritten keeping their non-matching survivors (NULL
-        predicate keeps the row, SQL DELETE semantics), and ``df`` lands
-        as new files. ``validate=True`` enforces Delta's replaceWhere
-        contract: every incoming row must satisfy ``condition`` —
-        otherwise the op would smuggle rows outside the replaced region
-        and a re-run would not be idempotent. Deletion vectors on
-        carried files ride along (their masked positions were never
-        matching-file rows to rewrite); conflicts with interleaved
-        commits like every rewrite."""
+        CONFLICT NARROWING (Delta's disjoint-predicate acceptance), for
+        the string form only: an interleaved commit whose added files
+        (judged by its record's stats and partition values) and removed
+        files (judged by the snapshot they left) provably hold no row
+        of the region is order-independent with this rewrite — rebase
+        onto it and retry, so two writers replacing disjoint regions
+        both commit. A full-state record, a deletion-vector change, a
+        column op, or a file that may hold region rows raises
+        ``CommitConflict``."""
+        return self._replace_where(df, condition, validate)
+
+    def _replace_where(
+        self, df: DataFrame, condition, validate: bool, literals=None
+    ) -> int:
+        """:meth:`overwrite_where`; with partition ``literals``
+        ({col: value}, added to ``df`` as columns of the type the base
+        snapshot records) committed as an ``overwrite-partition``."""
         from pyspark.sql import functions as F
 
         cond_str = condition if isinstance(condition, str) else None
@@ -2498,6 +2260,17 @@ class TransactionalTable:
         base = self.latest_version()
         if base is None:
             raise FileNotFoundError(f"no committed version in {self.root}")
+        mf = self._read_manifest(base)
+        if literals:
+            types = mf.schema or {}
+            df = df.select(
+                *[
+                    (F.lit(v).cast(types[c]) if c in types else F.lit(v))
+                    .alias(c)
+                    for c, v in literals.items()
+                ],
+                "*",
+            )
         if validate:
             strays = df.filter(
                 ~F.coalesce(condition, F.lit(False))
@@ -2507,12 +2280,17 @@ class TransactionalTable:
                     "overwrite_where: incoming rows must all satisfy "
                     "the replace predicate (Delta replaceWhere contract)"
                 )
-        mf = self._read_manifest(base)
-        hit_files = self._hit_files(mf, condition, cond_str)
+        covered = frozenset(
+            covered_files(
+                cond_str, mf.files, mf.stats or {}, mf.partitions or {}
+            )
+            if cond_str is not None
+            else ()
+        )
+        hit_files = self._hit_files(mf, condition, cond_str, covered)
         # keep the hive layout: a partially-replacing rewrite must not
-        # demote partitioned files to unpartitioned ones — a later
-        # overwrite_partition would conservatively treat layout-less
-        # files as in-target and swallow them (the materialize_dv rule)
+        # demote partitioned files to unpartitioned ones (the
+        # materialize_dv rule)
         pcols = self._pcols(mf)
         missing = [c for c in pcols if c not in df.columns]
         if missing:
@@ -2527,7 +2305,7 @@ class TransactionalTable:
                     sorted(hit_files),
                     dv_files=mf.dv_files,
                     column_ops=mf.column_ops,
-            recorded_schema=mf.declared_schema,
+                    recorded_schema=mf.declared_schema,
                 )
                 .filter(~F.coalesce(condition, F.lit(False)))
             )
@@ -2535,66 +2313,54 @@ class TransactionalTable:
                 survivors, partition_by=pcols or None
             )
         sch = self._enforce(df)
-        staged_new = self.stage_files(df, partition_by=pcols or None)
-        new_stats = self._file_stats(staged + staged_new)
-        new_blooms = self._auto_blooms(mf, staged + staged_new)
+        staged += self.stage_files(df, partition_by=pcols or None)
+        new_stats = self._file_stats(staged)
+        new_blooms = self._auto_blooms(mf, staged)
+        replaced = hit_files | covered
         while True:
-            carried = [f for f in mf.files if f not in hit_files]
-            carried_set = set(carried)
-            carried_stats = {
-                f: s
-                for f, s in (mf.stats or {}).items()
-                if f in carried_set
-            }
+            # carried files keep their recorded stats: a commit records
+            # stats for the files it adds
+            carried = [f for f in mf.files if f not in replaced]
             try:
                 return self._commit(
-                    carried + staged + staged_new,
-                    "overwrite-where",
+                    carried + staged,
+                    "overwrite-partition" if literals else "overwrite-where",
                     base,
                     rebase_ok=False,
-                    stats={**carried_stats, **new_stats},
-                    # entries on rewritten files are inert
+                    stats=new_stats,
+                    # entries on replaced files are inert
                     dv_files=mf.dv_files,
                     schema=sch,
                     blooms=new_blooms,
                 )
             except CommitConflict:
-                # CONFLICT NARROWING vs interleaved APPENDS (round 7,
-                # the predicate twin of overwrite_partition's walk): an
-                # append whose added files PROVABLY hold no row of the
-                # replaced region (judged by the commit record's own
-                # stats/partition values against the string predicate)
-                # is order-independent with this rewrite — rebase onto
-                # it and carry its files. Needs the STRING form of the
-                # predicate; Column-form rewrites keep strict behavior.
                 if cond_str is None:
-                    raise
-                from fefal_etl_spark.predicate_prune import (
-                    prune_candidates,
-                )
-
+                    raise  # a Column predicate cannot judge files
                 latest = self.latest_version()
                 assert latest is not None and latest > base
                 for v in range(base + 1, latest + 1):
                     rec = _load_record(self.root, v, self.backend)
-                    if rec.get("op") not in ("append", "stream-append"):
-                        raise  # only pure appends are order-independent
                     if (
                         "files" in rec
-                        or rec.get("remove")
                         or rec.get("dv_add")
                         or rec.get("dv_remove")
+                        or rec.get("column_op")
                     ):
                         raise
-                    cand = prune_candidates(
+                    prev = self._read_manifest(v - 1)
+                    if prune_candidates(
                         cond_str,
-                        list(rec.get("add") or []),
+                        rec.get("add") or [],
                         rec.get("stats") or {},
                         rec.get("partitions") or {},
-                    )
-                    if cand is None or cand:
-                        raise  # may hold replaced-region rows
-                base = latest  # disjoint appends: rebase and retry
+                    ) != [] or prune_candidates(
+                        cond_str,
+                        rec.get("remove") or [],
+                        prev.stats or {},
+                        prev.partitions or {},
+                    ) != []:
+                        raise  # may add or remove region rows
+                base = latest  # disjoint interleave: rebase and retry
                 mf = self._read_manifest(base)
 
     def delete_where(self, condition) -> int:
@@ -3898,11 +3664,11 @@ class TransactionalTable:
         sidecars are kept while any retained file may still need them
         (pairs addressing dead paths are inert and vacuum separately).
         ``partition_filter`` ({col: value}) scopes the rewrite to ONE
-        hive partition's files (judged from the manifest's recorded
-        values — zero listing): at 100 TB you OPTIMIZE yesterday's
-        partition after its ingest closes, never the whole table.
-        Files without a recorded value for a filtered column (mixed
-        layout-less files) are NOT victims — rewriting them would pull
+        partition's files — those every row of which the manifest
+        proves in it (`predicate_prune.covered_files`: recorded hive
+        values, or stats — zero listing): at 100 TB you OPTIMIZE
+        yesterday's partition after its ingest closes, never the whole
+        table. MIXED files are NOT victims — rewriting them would pull
         other partitions' rows into the target's layout. Composes with
         ``small_file_mb``. Fewer than two victims = nothing to pack:
         returns the current version WITHOUT committing."""
@@ -3918,20 +3684,17 @@ class TransactionalTable:
         }
         victims, retained = list(mf.files), []
         if partition_filter:
-            from fefal_etl_spark.predicate_prune import (
-                hive_partition_value,
+            eq = [(c, "=", v) for c, v in partition_filter.items()]
+            in_part = set(
+                covered_files(
+                    render_predicate(eq),
+                    mf.files,
+                    mf.stats or {},
+                    mf.partitions or {},
+                )
             )
-
-            want = {
-                c: hive_partition_value(v)
-                for c, v in partition_filter.items()
-            }
-            parts = mf.partitions or {}
-            in_part = lambda f: all(  # noqa: E731
-                (parts.get(f) or {}).get(c) == v for c, v in want.items()
-            )
-            victims = [f for f in victims if in_part(f)]
-            retained = [f for f in mf.files if not in_part(f)]
+            victims = [f for f in victims if f in in_part]
+            retained = [f for f in mf.files if f not in in_part]
         if small_file_mb is not None:
             cut = small_file_mb * 1024 * 1024
             retained += [f for f in victims if sizes[f] >= cut]
@@ -4264,9 +4027,25 @@ class TransactionalTable:
         bloom for ``col`` may contain ``value`` (files without a bloom
         are conservatively kept — no false negatives by construction),
         then apply the exact equality filter."""
-        import base64
-
         from pyspark.sql import functions as F
+
+        return self._scan(*self._bloom_kept(col, value, version)).filter(
+            F.col(col) == F.lit(value)
+        )
+
+    def skipped_files_bloom(
+        self, col: str, value, version: int | None = None
+    ) -> tuple[int, int]:
+        """(files_kept, files_total) for a :meth:`read_point`."""
+        _, mf, keep = self._bloom_kept(col, value, version)
+        return len(keep), len(mf.files)
+
+    def _bloom_kept(
+        self, col: str, value, version: int | None
+    ) -> tuple[int, _Manifest, list[str]]:
+        """(version, snapshot, files whose ``col`` bloom may hold
+        ``value``) for a point lookup."""
+        import base64
 
         v = self.latest_version() if version is None else version
         if v is None:
@@ -4274,44 +4053,14 @@ class TransactionalTable:
         mf = self._read_manifest(v)
         col_blooms = (mf.blooms or {}).get(col) or {}
         positions = self._bloom_positions(str(value))
-        keep = []
-        for f in mf.files:
-            b64 = col_blooms.get(f)
-            if b64 is None:
-                keep.append(f)
-                continue
-            bits = base64.b64decode(b64)
-            if all(bits[p // 8] & (1 << (p % 8)) for p in positions):
-                keep.append(f)
-        if not keep:
-            return self.read(v).filter(F.lit(False))
-        df = self._read_files(
-            keep, dv_files=mf.dv_files, column_ops=mf.column_ops,
-            recorded_schema=mf.declared_schema,
-        )
-        return df.filter(F.col(col) == F.lit(value))
 
-    def skipped_files_bloom(
-        self, col: str, value, version: int | None = None
-    ) -> tuple[int, int]:
-        """(files_kept, files_total) for a read_point — the auditable
-        bloom-skipping measure, mirror of :meth:`skipped_files`."""
-        import base64
-
-        v = self.latest_version() if version is None else version
-        mf = self._read_manifest(v)  # type: ignore[arg-type]
-        col_blooms = (mf.blooms or {}).get(col) or {}
-        positions = self._bloom_positions(str(value))
-        kept = 0
-        for f in mf.files:
-            b64 = col_blooms.get(f)
+        def may_hold(b64: str | None) -> bool:
             if b64 is None:
-                kept += 1
-                continue
+                return True
             bits = base64.b64decode(b64)
-            if all(bits[p // 8] & (1 << (p % 8)) for p in positions):
-                kept += 1
-        return kept, len(mf.files)
+            return all(bits[p // 8] & (1 << (p % 8)) for p in positions)
+
+        return v, mf, [f for f in mf.files if may_hold(col_blooms.get(f))]
 
     def history(self) -> DataFrame:
         """The commit history as a DataFrame (Delta's DESCRIBE HISTORY):

@@ -213,6 +213,28 @@ def test_redeclared_dead_column_is_live_for_every_handle(spark, tmp_path):
     assert sorted(fresh.read().columns) == ["a", "b"]
 
 
+def test_add_columns_readds_dead_column(spark, tmp_path):
+    """overwrite(a,b) → overwrite(a) → add_columns(b): ``b`` left the
+    live set, so it can be added again (it is not "already there"),
+    under the widening rule a re-declaring write follows: the same or
+    a wider type comes back, a narrower one is refused."""
+    root = str(tmp_path / "t")
+    t = TransactionalTable(spark, root)
+    t.overwrite(spark.createDataFrame([(1, 7)], "a int, b int"))
+    t.overwrite(spark.createDataFrame([(2,)], "a int"))
+    with pytest.raises(SchemaConflict):
+        t.add_columns({"b": "smallint"})
+    with pytest.raises(SchemaConflict):
+        t.add_columns({"a": "int"})  # live: already exists
+    v = t.add_columns({"b": "bigint"})
+    fresh = TransactionalTable(spark, root)
+    assert fresh._read_manifest(v).declared_schema == {
+        "a": "int",
+        "b": "bigint",
+    }
+    assert [tuple(r) for r in fresh.read().collect()] == [(2, None)]
+
+
 def test_bloom_declaration_survives_overwrite_and_compact(spark, tmp_path):
     """build_bloom("a") → overwrite → compact: the built column keeps
     its declaration after its files leave, so both handles report the

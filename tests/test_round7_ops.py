@@ -300,8 +300,9 @@ def test_delete_where_dv_pruned_noop(spark, tmp_path):
 
 def test_partition_value_pruned_overwrite_where(spark, tmp_path):
     """On a hive-partitioned table a partition-equality string predicate
-    prunes discovery to that partition's files via the manifest's
-    partition values (no stats needed)."""
+    needs no discovery scan: the manifest's partition values prune the
+    other partitions' files and prove that partition's files wholly
+    inside the region (no stats needed)."""
     root = str(tmp_path / "t")
     t = TransactionalTable(spark, root)
     df = spark.createDataFrame(
@@ -320,8 +321,9 @@ def test_partition_value_pruned_overwrite_where(spark, tmp_path):
     repl = spark.createDataFrame([("b", 30)], "p string, k bigint")
     t.overwrite_where(repl, "p = 'b'")
     t._read_files = orig
-    parts = t._read_manifest(0).partitions
-    assert seen and all(parts[f]["p"] == "b" for f in seen[0])
+    # every row of the p=b files matches: they are dropped whole, and
+    # no file is scanned (it used to scan exactly the p=b files)
+    assert seen == []
     # hive layout surfaces the partition column after the data columns
     assert _rows(t.read().select("p", "k")) == [
         ("a", 1), ("a", 2), ("b", 30), ("c", 5),
@@ -441,6 +443,45 @@ def test_overwrite_where_accepts_disjoint_append(spark, tmp_path):
     assert ks == [0, 5, 10, 15, 20] + list(range(25, 100)) + list(
         range(500, 510)
     )
+
+
+def test_overwrite_where_rebases_past_disjoint_rewrite(spark, tmp_path):
+    """The one narrowing walk judges removed files too: a replaceWhere
+    interleaved with a partition overwrite of ANOTHER partition (files
+    removed and added, all provably outside the region) rebases; one
+    interleaved with a delete inside the region conflicts."""
+    from fefal_etl_spark.table import CommitConflict
+
+    root = str(tmp_path / "t")
+    t = _part_table(spark, root)
+    t2 = TransactionalTable(spark, root)
+    orig_stage = t.stage_files
+
+    def interleave(write):
+        done = [False]
+
+        def stage(df, **kw):
+            files = orig_stage(df, **kw)
+            if not done[0]:
+                done[0] = True
+                write()
+            return files
+
+        return stage
+
+    t.stage_files = interleave(
+        lambda: t2.overwrite_partition(
+            spark.createDataFrame([(222,)], "v bigint"), p="2"
+        )
+    )
+    repl = spark.createDataFrame([("1", 111)], "p string, v bigint")
+    assert t.overwrite_where(repl, "p = '1'") == 2
+    rows = {(str(r["p"]), r["v"]) for r in t.read().collect()}
+    assert {v for p, v in rows if p in ("1", "2")} == {111, 222}
+    t.stage_files = interleave(lambda: t2.delete_where("v = 111"))
+    with pytest.raises(CommitConflict):
+        t.overwrite_where(repl, "p = '1'")
+    t.stage_files = orig_stage
 
 
 def test_overwrite_where_overlapping_append_conflicts(spark, tmp_path):

@@ -64,6 +64,45 @@ def test_read_matching_keeps_nan_files(spark, tmp_path):
     assert [r["k"] for r in got] == [2]  # the NaN row matches >= in Spark
 
 
+def test_between_prunes_float_stats_despite_nan():
+    """NaN <= hi is false, so a NaN row never makes BETWEEN TRUE: float
+    stats [0.5, 1.5] prove the file holds no row in [5, 8]. NOT BETWEEN
+    still keeps it (the NaN row matches)."""
+    from fefal_etl_spark.predicate_prune import prune_candidates
+
+    stats = {"a": {"x": [0.5, 1.5]}}
+    assert prune_candidates("x BETWEEN 5 AND 8", ["a"], stats, {}) == []
+    assert prune_candidates("x BETWEEN 1 AND 8", ["a"], stats, {}) == ["a"]
+    assert prune_candidates("NOT x BETWEEN 0 AND 2", ["a"], stats, {}) == [
+        "a"
+    ]
+
+
+def test_read_where_between_on_float_files_with_nan(spark, tmp_path):
+    """read_where is the pruner's BETWEEN: a float file whose stats miss
+    [lo, hi] is skipped, a file holding a NaN row (its footer max is NaN
+    — junk bounds) is kept, and the NaN row matches no BETWEEN but
+    does match its negation."""
+    from fefal_etl_spark.table import TransactionalTable
+
+    t = TransactionalTable(spark, str(tmp_path / "t"))
+    t.overwrite(
+        spark.createDataFrame([(1, 0.5), (2, 1.5)], "k int, v double")
+        .coalesce(1)
+    )
+    t.append(
+        spark.createDataFrame(
+            [(3, 1.0), (4, float("nan"))], "k int, v double"
+        ).coalesce(1)
+    )
+    assert t.skipped_files("v", 5.0, 8.0) == (1, 2)
+    assert t.pruned_predicate_files("v BETWEEN 5 AND 8") == (1, 2)
+    assert t.read_where("v", 5.0, 8.0).count() == 0
+    assert {r["k"] for r in t.read_where("v", 0.5, 1.0).collect()} == {1, 3}
+    got = t.read_matching("NOT v BETWEEN 0.0 AND 2.0").collect()
+    assert [r["k"] for r in got] == [4]
+
+
 # ----------------------------------------------------------------------
 # ADVICE r7 (low): boolean partition values vs hive path form
 # ----------------------------------------------------------------------
@@ -130,6 +169,84 @@ def test_read_partition_boolean_filter(spark, tmp_path):
     kept, total = t.pruned_partition_files(flag=False)
     assert kept < total  # boolean filter actually prunes now
     assert {r["k"] for r in t.read_partition(flag=False).collect()} == {2, 3}
+
+
+def test_rendered_literals_read_back_in_spark(spark, tmp_path):
+    """The keyword readers render their values as SQL text: quotes and
+    backslashes in strings survive Spark's parser (and the pruner's),
+    and an infinite bound still reads (it renders as a cast the pruner
+    leaves unpruned)."""
+    from fefal_etl_spark.table import TransactionalTable
+
+    t = TransactionalTable(spark, str(tmp_path / "t"))
+    t.overwrite(
+        spark.createDataFrame(
+            [(1, "a\\b", 0.5), (2, "it's", 1.5), (3, None, 2.5)],
+            "k int, s string, v double",
+        ).repartition(3, "k")
+    )
+    assert [r["k"] for r in t.read_partition(s="a\\b").collect()] == [1]
+    assert t.pruned_partition_files(s="a\\b")[0] == 1
+    got = t.read_partition_in("s", ["it's", None]).collect()
+    assert sorted(r["k"] for r in got) == [2, 3]
+    got = t.read_where("v", 1.0, float("inf")).collect()
+    assert sorted(r["k"] for r in got) == [2, 3]
+
+
+def test_read_partition_none_reads_null_partition(spark, tmp_path):
+    """``p=None`` is the NULL partition for both the read and the
+    replace: read_partition returns the rows overwrite_partition
+    replaces (``= NULL`` used to match nothing)."""
+    from fefal_etl_spark.table import TransactionalTable
+
+    t = TransactionalTable(spark, str(tmp_path / "t"))
+    t.overwrite(
+        spark.createDataFrame(
+            [(1, "a"), (2, None), (3, None)], "k int, p string"
+        ).coalesce(1),
+        partition_by=["p"],
+    )
+    assert t.pruned_partition_files(p=None) == (1, 2)
+    assert {r["k"] for r in t.read_partition(p=None).collect()} == {2, 3}
+    assert {r["k"] for r in t.read_partition_in("p", [None]).collect()} == {
+        2,
+        3,
+    }
+    t.overwrite_partition(spark.createDataFrame([(9,)], "k int"), p=None)
+    assert {r["k"] for r in t.read_partition(p=None).collect()} == {9}
+    assert {r["k"] for r in t.read().collect()} == {1, 9}
+
+
+def test_overwrite_partition_opens_no_covered_file(spark, tmp_path):
+    """On a hive-only table every target file is covered by the
+    partition predicate (and every other file pruned): the replace
+    drops them from the manifest without a discovery scan or a restage
+    — no existing data file is opened."""
+    from fefal_etl_spark.table import TransactionalTable
+
+    t = TransactionalTable(spark, str(tmp_path / "t"))
+    t.overwrite(
+        spark.range(12)
+        .coalesce(1)
+        .select(F.col("id").alias("k"), (F.col("id") % 3).alias("p")),
+        partition_by=["p"],
+    )
+    before = set(t._read_manifest(0).files)
+    opened = []
+    orig = t._read_files
+
+    def spy(files, **kw):
+        opened.extend(files)
+        return orig(files, **kw)
+
+    t._read_files = spy
+    v = t.overwrite_partition(spark.createDataFrame([(100,)], "k long"), p=1)
+    t._read_files = orig
+    assert not set(opened) & before
+    mf = t._read_manifest(v)
+    assert len(before - set(mf.files)) == 1  # the p=1 file, dropped whole
+    assert {r["k"] for r in t.read_partition(p=1).collect()} == {100}
+    assert t.read().count() == 9
 
 
 # ----------------------------------------------------------------------
