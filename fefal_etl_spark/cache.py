@@ -1,19 +1,36 @@
-"""Central registry for per-call persisted frames.
+"""The session's caches: reused values behind one key and one release
+rule, and the lifetimes of per-call persisted frames.
 
-Several registry queries persist an intermediate that feeds multiple
-downstream legs of the SAME returned plan (e.g. `quality_rank_blend`'s
-feature frame, `matryoshka_recall`'s per-dim corpus). The returned
-DataFrame is lazy, so the query function cannot unpersist before the
-caller materializes it — but in a long shared session (bench loops, the
-driver's full-registry sweep) those cached blocks would otherwise
-accumulate for the application lifetime: exactly the memory pressure
-behind the r2 late-suite OOM.
+**The session cache** (:func:`memo`). Every value the library reuses
+across calls — a memoized query plan, a base-table relation, a collected
+scalar, a persisted family of shared frames — lives in one registry
+under ``(application id, kind, key)``. ``kind`` names the family (the
+comment above each call site says what it holds and why its key is
+enough); ``key`` is the caller's. A value derived from source parquet
+passes ``sources=(sf_dir, tables)`` and is stamped with
+``staging.source_fingerprint`` of those tables (every ``*.parquet`` of
+the dir when ``tables`` is empty): a lookup under a different
+fingerprint rebuilds, so a regenerated source is never served a stale
+value, and the replaced entry is freed. A dir that cannot be
+fingerprinted (``OSError``) is built and nothing is stored, since no
+key could tell its states apart. Entries are dropped, and their
+``free`` run (unpersist, :func:`free_checkpoint`), when the first
+access under a new application id finds another application's entries,
+when ``limit`` same-kind entries are exceeded (oldest first), or by an
+explicit :func:`release`. ``build`` runs outside the lock, because
+builds nest (a plan build loads tables); when two threads race, the
+first stored value wins and the loser's is freed.
 
-Pattern: query functions call ``track(df.persist())``; harness loops call
-``release_tracked()`` after materializing each query's result. Named
-family caches that are REUSED across calls (`_COPURCHASE`, the pipeline
-star frames) keep their own release hooks — this registry is only for
-single-call scratch persists.
+**Per-call persists.** Several registry queries persist an intermediate
+that feeds multiple downstream legs of the SAME returned plan (e.g.
+`quality_rank_blend`'s feature frame, `matryoshka_recall`'s per-dim
+corpus). The returned DataFrame is lazy, so the query function cannot
+unpersist before the caller materializes it — but in a long shared
+session (bench loops, the driver's full-registry sweep) those cached
+blocks would otherwise accumulate for the application lifetime: exactly
+the memory pressure behind the r2 late-suite OOM. Query functions call
+``track(df.persist())``; harness loops call ``release_tracked()`` after
+materializing each query's result.
 
 Concurrency (ADVICE r4): the registry is guarded by a lock, and
 harnesses that run queries on MULTIPLE THREADS should use
@@ -39,7 +56,7 @@ from __future__ import annotations
 import threading
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _LOCK = threading.Lock()
 _TRACKED: list[DataFrame] = []
@@ -63,9 +80,9 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
-def _drain(frames: list[DataFrame]) -> None:
-    while frames:
-        df = frames.pop()
+def unpersist_all(frames) -> None:
+    """Unpersist each frame; one that cannot be is skipped."""
+    for df in frames:
         try:
             df.unpersist()
         except Exception:
@@ -79,7 +96,7 @@ def release_tracked() -> None:
     with _LOCK:
         frames = list(_current_list())
         _current_list().clear()
-    _drain(frames)
+    unpersist_all(frames)
 
 
 @contextmanager
@@ -100,7 +117,7 @@ def tracking_scope():
             _SCOPED.stack.pop()
             pending = list(frames)
             frames.clear()
-        _drain(pending)
+        unpersist_all(pending)
 
 
 def _thread_checkpoints() -> list[DataFrame]:
@@ -152,3 +169,82 @@ def release_checkpoints() -> None:
     frames.clear()
     for df in drop:
         free_checkpoint(df)
+
+
+_MEMO_LOCK = threading.RLock()
+#: application id -> kind -> key -> (source fingerprint, value, free)
+_MEMO: dict[str, dict[str, dict]] = {}
+
+
+def _drop(entries: dict, key) -> None:
+    _fp, value, free = entries.pop(key)
+    if free is not None:
+        free(value)
+
+
+def _kinds(app: str) -> dict[str, dict]:
+    """The live application's entries by kind, after dropping every
+    other application's. Call under ``_MEMO_LOCK``."""
+    for other in [a for a in _MEMO if a != app]:
+        for entries in _MEMO.pop(other).values():
+            for key in list(entries):
+                _drop(entries, key)
+    return _MEMO.setdefault(app, {})
+
+
+def _get(app: str, kind: str, key) -> tuple | None:
+    with _MEMO_LOCK:
+        return _kinds(app).get(kind, {}).get(key)
+
+
+def memo(
+    spark: SparkSession, kind: str, key, build, *, sources=None, free=None, limit=None
+):
+    """The value stored under ``(application id, kind, key)`` — stamped
+    with the fingerprint of ``sources=(sf_dir, tables)`` when given —
+    else ``build()``, stored. ``free(value)`` runs when the entry is
+    dropped; ``limit`` caps the application's entries of this kind,
+    dropping the oldest. See the module docstring for the rules."""
+    from fefal_etl_spark import staging
+
+    try:
+        fp = None if sources is None else staging.source_fingerprint(
+            sources[0], *sources[1]
+        )
+    except OSError:
+        return build()
+    app = spark.sparkContext.applicationId
+    hit = _get(app, kind, key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    value = build()
+    with _MEMO_LOCK:
+        entries = _kinds(app).setdefault(kind, {})
+        old = entries.get(key)
+        if old is not None and old[0] == fp:  # lost a race: keep the first
+            if free is not None:
+                free(value)
+            return old[1]
+        if old is not None:  # built from an older source
+            _drop(entries, key)
+        entries[key] = (fp, value, free)
+        while limit is not None and len(entries) > limit:
+            _drop(entries, next(iter(entries)))
+    return value
+
+
+def peek(spark: SparkSession, kind: str, key):
+    """The value of a source-less :func:`memo` entry, or None; never
+    builds."""
+    hit = _get(spark.sparkContext.applicationId, kind, key)
+    return None if hit is None else hit[1]
+
+
+def release(kind: str, match=None) -> None:
+    """Drop every application's ``kind`` entries whose key satisfies
+    ``match`` (all of them by default) and run their ``free``."""
+    with _MEMO_LOCK:
+        for kinds in list(_MEMO.values()):
+            entries = kinds.get(kind, {})
+            for key in [k for k in entries if match is None or match(k)]:
+                _drop(entries, key)

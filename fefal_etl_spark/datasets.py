@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fefal_etl_spark.cache import memo
 from fefal_etl_spark.session import apply_runtime_confs
 
 TABLES = (
@@ -36,36 +37,22 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Memoized base-table DataFrames, keyed by (applicationId, sf_dir, name).
-# A DataFrame is an immutable LAZY plan — caching the object reuses the
-# resolved parquet relation (schema inference + file listing + DataSource
-# resolution, measured ~110 ms of driver time per `spark.read.parquet`
-# call), not any computed rows: every action on it still scans the
-# parquet inputs. The fixtures are read-only for a session's lifetime
-# (TESTDATA.md), so the frozen file listing is exact; entries from other
-# (stopped) applications are evicted on first miss. This is the same
-# class of metadata reuse as Spark's own session-level
-# FileStatusCache — it exists because a 180-query bench pass otherwise
-# spends tens of seconds re-inferring schemas of the same ten files
-# (optimization guide §5: the driver should do almost no data work).
-_TABLE_CACHE: dict[tuple[str, str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from fefal_etl_spark.staging import source_fingerprint
+    """``<sf_dir>/<name>.parquet`` as a DataFrame, from the session cache
+    (kind ``table``, keyed by dir and table name and stamped with that
+    table's source fingerprint). A DataFrame is an immutable LAZY plan —
+    caching the object reuses the resolved parquet relation (schema
+    inference + file listing + DataSource resolution, measured ~110 ms
+    of driver time per `spark.read.parquet` call), not any computed
+    rows: every action on it still scans the parquet inputs. The frozen
+    file listing is exact while the fingerprint holds, and a regenerated
+    table gets a fresh relation. This is the same class of metadata
+    reuse as Spark's own session-level FileStatusCache — it exists
+    because a 180-query bench pass otherwise spends tens of seconds
+    re-inferring schemas of the same ten files (optimization guide §5:
+    the driver should do almost no data work)."""
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
-        # regenerated source data ⇒ new fingerprint ⇒ fresh relation
-        # (same invalidation contract as llm.queries._corpus)
-        source_fingerprint(sf_dir, name),
-    )
-    df = _TABLE_CACHE.get(key)
-    if df is None:
-        for k in [k for k in _TABLE_CACHE if k[0] != key[0]]:
-            del _TABLE_CACHE[k]
+    def build() -> DataFrame:
         apply_runtime_confs(spark)
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
         if name == "events" and dict(df.dtypes).get("ts") == "bigint":
@@ -75,8 +62,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "ts",
                 F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"),
             )
-        _TABLE_CACHE[key] = df
-    return df
+        return df
+
+    return memo(
+        spark,
+        "table",
+        (os.path.abspath(sf_dir), name),
+        build,
+        sources=(sf_dir, (name,)),
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -16,13 +16,18 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fefal_etl_spark.cache import free_checkpoint, keep_checkpoint
+from fefal_etl_spark.cache import (
+    free_checkpoint,
+    keep_checkpoint,
+    memo,
+    release,
+    unpersist_all,
+)
 from fefal_etl_spark.datasets import load_table
 from fefal_etl_spark.plans.config import GroupSpec, PipelineConfig
 from fefal_etl_spark.plans.pipeline import run_pipeline
 from fefal_etl_spark.plans.star import build_star
 from fefal_etl_spark.queries import (
-    _PLAN_MEMO,
     QUERIES,
     register,
     sql_norm,
@@ -103,79 +108,79 @@ def _registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _run(spark: SparkSession, sf_dir: str):
-    return run_pipeline(_survey(spark, sf_dir), _registry(spark, sf_dir), _config())
-
-
-# The three pipeline queries share one EP2 transform + EP3 star build. Without
+# The pipeline queries share one EP2 transform + EP3 star build. Without
 # sharing, each registry entry re-runs the whole classify chain (~8 chained
 # jobs each — the round-1 bench's single worst wall-time item). The
-# classified frame ``run_pipeline`` materializes is built once per
-# (application, sf_dir) and the star dict derived from it;
-# each entry owns its checkpoint and star blocks, and
-# `release_pipeline_cache` frees them for long-lived sessions.
-#
-# Keyed by ``applicationId`` (unique per SparkContext lifetime), NOT
-# ``id(spark)``: CPython reuses object ids after GC, so an id-keyed cache in
-# a long-lived process could serve a dead session's persisted frame to a new
-# one (VERDICT r2 "what's wrong" item 5). On first use under a new
-# application, entries owned by previous applications are dropped and their
-# blocks released.
-_SHARED: dict[tuple[str, str], tuple] = {}
+# classified frame ``run_pipeline`` materializes, and the star derived
+# from it, live in the session cache (kind ``pipeline``). The survey is a
+# function of ``customer`` and the config, so the key is (dir, survey,
+# `_cfg_fingerprint`) stamped with the customer fingerprint: configs that
+# are provably equal (hand-built vs Mongo-imported, `mongo_config_pipeline`)
+# share ONE entry, and a regenerated customer table gets a fresh one.
+# Each entry owns its checkpoint and star blocks, freed when it is dropped.
+# Configs are caller-controlled, so at most 4 entries are kept per session
+# (the expected live set is 2: this survey and the full-groups one).
 
 
-def _evict(cache: dict, keys) -> None:
-    """Drop cache entries: unpersist their star frames, free the
+def _drop_pipeline_entry(entry) -> None:
+    """Free a ``pipeline`` entry: unpersist its star frames, free the
     classified frame's checkpoint (the entry owns it), and forget the
-    memoized plans of this module's queries over the same application
-    and source dir, since those plans read the freed checkpoint."""
+    memoized plans of this module's queries, since those plans read the
+    freed checkpoint."""
+    res, star = entry
+    unpersist_all(star.values())
+    free_checkpoint(res.frame)
     names = {n for n, fn in QUERIES.items() if fn.__module__ == __name__}
-    for k in keys:
-        res, star_ = cache.pop(k)
-        for df_ in star_.values():
-            try:
-                df_.unpersist()
-            except Exception:
-                pass
-        free_checkpoint(res.frame)
-        app_id, sf_dir = k[0], os.path.abspath(k[1])
-        for m in [
-            m for m in _PLAN_MEMO
-            if m[0] == app_id and m[1] in names and m[2] == sf_dir
-        ]:
-            _PLAN_MEMO.pop(m, None)
+    release("plan", lambda k: k[0] in names)
 
 
-def _shared(spark: SparkSession, sf_dir: str):
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    if key not in _SHARED:
-        _evict(_SHARED, [k for k in _SHARED if k[0] != app_id])
-        res = _run(spark, sf_dir)
+def _shared(
+    spark: SparkSession, sf_dir: str, cfg: PipelineConfig | None = None
+):
+    """(classified result, persisted star) of the pipeline over this
+    module's survey under `_config()`, or, given ``cfg``, over the
+    full-groups survey under ``cfg``."""
+    full = cfg is not None
+    cfg = cfg if full else _config()
+
+    def build():
+        survey = (_survey_full if full else _survey)(spark, sf_dir)
+        res = run_pipeline(survey, _registry(spark, sf_dir), cfg)
         # the entry owns the checkpoint: a wave loader's
         # release_star_cache() must not free it under the cache
         keep_checkpoint(res.frame)
+        tipos = (
+            spark.createDataFrame(
+                [(7, "Dias úteis")],
+                "id_tipo_disp int, descricao_tipo_disp string",
+            )
+            if full
+            else None
+        )
         # persist the star frames (round 12): they are fact/dim
-        # outputs a customer-count in size, and the five consumer
-        # queries otherwise re-derive each fact from the classified
-        # frame per invocation — measured 23 warm jobs → 8 on the
-        # full-groups aggregation.
-        star = {k_: df_.persist() for k_, df_ in build_star(res).items()}
-        _SHARED[key] = (res, star)
-    return _SHARED[key]
+        # outputs a customer-count in size, and the consumer queries
+        # otherwise re-derive each fact from the classified frame per
+        # invocation — measured 23 warm jobs → 8 on the full-groups
+        # aggregation.
+        star = build_star(res, tipos_disponibilidades=tipos)
+        return res, {k: df.persist() for k, df in star.items()}
+
+    return memo(
+        spark,
+        "pipeline",
+        (os.path.abspath(sf_dir), full, _cfg_fingerprint(cfg)),
+        build,
+        sources=(sf_dir, ("customer",)),
+        free=_drop_pipeline_entry,
+        limit=4,
+    )
 
 
 def release_pipeline_cache() -> None:
-    """Drop every cached pipeline entry (bench/oracle-loop hygiene) —
-    BOTH the EP1 `_SHARED` cache and the config-fingerprinted
-    `_SHARED_FULL` twin (review r11: clearing only one leaked the
-    other's persisted blocks and left it serving star frames whose
-    underlying persist was just released): unpersist the star frames,
-    free the classified frames' checkpoints and forget the memoized
-    plans built on them, so the next call rebuilds. A frame a caller
-    still holds from before the release cannot be read after it."""
-    for cache in (_SHARED, _SHARED_FULL):
-        _evict(cache, list(cache))
+    """Drop every cached pipeline entry (bench/oracle-loop hygiene); a
+    frame a caller still holds from before the release cannot be read
+    after it."""
+    release("pipeline")
 
 
 # --------------------------------------------------------------------------
@@ -496,55 +501,6 @@ def _cfg_fingerprint(cfg: PipelineConfig) -> str:
     )
 
 
-# full-groups twin of _SHARED, keyed additionally by the CONFIG
-# fingerprint (round 11 — VERDICT r10 item 6): mongo_config_pipeline
-# imports a config that is provably equal to _config_full()'s, so both
-# registry entries resolve to ONE persisted classified frame + star —
-# the mongo row had re-run the whole EP2+EP3 chain per bench call for
-# three rounds (8.5 s warm; the only thing it ADDS over
-# pipeline_full_groups is the driver-side document parse).
-_SHARED_FULL: dict[tuple[str, str, str], tuple] = {}
-
-
-#: cap on same-app cache entries (advice r11): distinct (sf_dir,
-#: config-fingerprint) keys are caller-controlled, so without a bound a
-#: long-lived app sweeping many configs would grow persisted-block
-#: memory forever. Expected live set is 1-2 (the driver SF + maybe one
-#: variant); evict the oldest beyond this.
-_SHARED_FULL_MAX = 4
-
-
-def _shared_full(spark: SparkSession, sf_dir: str, cfg: PipelineConfig):
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, _cfg_fingerprint(cfg))
-    if key not in _SHARED_FULL:
-        stale = [k for k in _SHARED_FULL if k[0] != app_id]
-        # same-app LRU bound (advice r11): insertion order is access
-        # order enough here — entries are built once and reused
-        same = [k for k in _SHARED_FULL if k[0] == app_id]
-        stale += same[: max(0, len(same) + 1 - _SHARED_FULL_MAX)]
-        _evict(_SHARED_FULL, stale)
-        res = run_pipeline(
-            _survey_full(spark, sf_dir), _registry(spark, sf_dir), cfg
-        )
-        keep_checkpoint(res.frame)  # owned by the entry, as in _shared
-        tipos = spark.createDataFrame(
-            [(7, "Dias úteis")],
-            "id_tipo_disp int, descricao_tipo_disp string",
-        )
-        # star frames persisted for the same reason as in _shared
-        # (round 12): the full-groups aggregation legs re-derived every
-        # fact from the classified frame per invocation
-        star = {
-            k_: df_.persist()
-            for k_, df_ in build_star(
-                res, tipos_disponibilidades=tipos
-            ).items()
-        }
-        _SHARED_FULL[key] = (res, star)
-    return _SHARED_FULL[key]
-
-
 def _full_groups_result(
     spark: SparkSession, sf_dir: str, cfg: PipelineConfig
 ) -> DataFrame:
@@ -552,8 +508,8 @@ def _full_groups_result(
     the body of `pipeline_full_groups`, parameterized on the config so
     `mongo_config_pipeline` can drive the identical plan from an
     imported Mongo document set (and, with an EQUAL config, the
-    identical persisted frame — see _SHARED_FULL)."""
-    _res, star = _shared_full(spark, sf_dir, cfg)
+    identical persisted frame — see `_shared`)."""
+    _res, star = _shared(spark, sf_dir, cfg)
     fi = star["fact_resposta_interesse"]
     dim_area = star["dim_area_tematica"]
     com = star["comentario"]

@@ -40,6 +40,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fefal_etl_spark.cache import memo
+
 # Wall-clock seconds spent BUILDING staged tables / scenarios in this
 # process, keyed by staged name ("scenario:<name>" for _txn_scenario
 # builds). perfbench snapshots the running total around a session's
@@ -80,8 +82,19 @@ def staging_root() -> str:
 
 def source_fingerprint(sf_dir: str, *tables: str) -> str:
     """md5 over (relative name, size, mtime_ns) of every file under each
-    ``<sf_dir>/<table>.parquet`` (file or directory). Regenerated source
-    data ⇒ different fingerprint ⇒ different staging path."""
+    ``<sf_dir>/<table>.parquet`` (file or directory; a directory source
+    is walked file by file, so an in-place rewrite of one of its files
+    shows). With no table names, every ``*.parquet`` entry of the dir,
+    and an unlistable dir raises ``OSError``. Regenerated source data ⇒
+    different fingerprint ⇒ different staging path and a fresh session
+    cache entry."""
+    if not tables:
+        with os.scandir(sf_dir) as it:
+            tables = tuple(
+                e.name[: -len(".parquet")]
+                for e in it
+                if e.name.endswith(".parquet")
+            )
     parts: list[str] = []
     for table in tables:
         path = os.path.join(sf_dir, f"{table}.parquet")
@@ -196,14 +209,6 @@ def stage_table(
     return final
 
 
-# (application-id, staged path) -> read DataFrame. spark.read.parquet
-# re-lists the directory and re-reads footers on every call (~0.3-0.4 s
-# of driver time per staged table per query invocation at sf0.1); the
-# staged path is content-addressed and its files immutable once
-# published, so the read plan can be built once per session and reused.
-_READ_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def stage_parquet(
     spark: SparkSession,
     name: str,
@@ -223,8 +228,9 @@ def stage_parquet(
         frame.write.mode("overwrite").parquet(p)
 
     path = stage_table(spark, name, fingerprint, _write, scope=scope)
-    key = (spark.sparkContext.applicationId, path)
-    out = _READ_MEMO.get(key)
-    if out is None:
-        out = _READ_MEMO[key] = spark.read.parquet(path)
-    return out
+    # session cache kind ``staged_read``: spark.read.parquet re-lists the
+    # directory and re-reads footers on every call (~0.3-0.4 s of driver
+    # time per staged table per query invocation at sf0.1); the staged
+    # path is content-addressed and its files immutable once published,
+    # so the path alone keys the read plan
+    return memo(spark, "staged_read", path, lambda: spark.read.parquet(path))

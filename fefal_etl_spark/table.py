@@ -51,6 +51,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fefal_etl_spark.cache import memo, peek
 from fefal_etl_spark.predicate_prune import (
     covered_files,
     prune_candidates,
@@ -58,26 +59,6 @@ from fefal_etl_spark.predicate_prune import (
 )
 
 _MANIFEST_RE = re.compile(r"^manifest-(\d+)\.json$")
-
-#: footer-inferred parquet schema per (table root, commit dir) — commit
-#: dirs are uuid-addressed and written exactly once, so their physical
-#: schema is immutable for the life of the process. Consumed by
-#: `_read_files` to build readers with an explicit schema (skipping
-#: per-call footer inference) and to prove the single-reader fast path
-#: safe. Entries are a few hundred bytes each; vacuumed commits simply
-#: leave dead keys behind.
-_COMMIT_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
-
-# Lazy READ-PLAN memo (round 12): data files under a commit dir are
-# uuid-addressed and write-once, so an identical (file list, dv list,
-# column ops, declared schema, with_pos) request over the same root is
-# an identical lazy plan — rebuilding it cost a few hundred ms of
-# driver/py4j work on every snapshot read of an unchanged table. The
-# memo stores ONLY analyzed plans (no rows; every action still scans
-# the parquet bytes), is keyed by application so a restarted session
-# never sees a dead session's frames, and is bounded FIFO.
-_READ_PLAN_MEMO: dict[tuple, object] = {}
-_READ_PLAN_MEMO_MAX = 256
 
 #: "parameter not passed" sentinel for _commit(partition_spec=...):
 #: None is a MEANINGFUL value there (reset to never-declared — restore
@@ -789,13 +770,21 @@ class TransactionalTable:
         copy-on-write), so at 100 TB this stays a map-side filter with
         zero extra shuffle of the data. ``with_pos`` keeps the
         ``__dv_file``/``__dv_pos`` helper columns for callers that need
-        row addresses (the DV writer itself)."""
+        row addresses (the DV writer itself).
+
+        The plan is kept in the session cache (kind ``read_plan``): data
+        files under a commit dir are uuid-addressed and write-once, so
+        an identical request over the same root is an identical lazy
+        plan, and rebuilding it cost a few hundred ms of driver/py4j
+        work on every snapshot read of an unchanged table. The entry is
+        only an analyzed plan (every action still scans the parquet
+        bytes), so the request itself is the whole key; the newest 256
+        plans are kept."""
         from pyspark.sql import functions as F
 
         need_meta = with_pos or bool(dv_files)
         root_abs = os.path.abspath(self.root)
         memo_key = (
-            self.spark.sparkContext.applicationId,
             root_abs,
             tuple(files),
             tuple(dv_files or ()),
@@ -803,7 +792,7 @@ class TransactionalTable:
             tuple(tuple(op) for op in (column_ops or ())),
             tuple(sorted((recorded_schema or {}).items())),
         )
-        hit = _READ_PLAN_MEMO.get(memo_key)
+        hit = peek(self.spark, "read_plan", memo_key)
         if hit is not None:
             return hit
         prefix = "file:" + root_abs + "/"
@@ -813,13 +802,16 @@ class TransactionalTable:
             groups.setdefault(commit, []).append(f)
         # Per-commit parquet schemas are immutable (commit dirs are
         # uuid-addressed, written once), so the footer-inferred schema is
-        # memoized per (table root, commit dir): reader creation with an
+        # kept in the session cache (kind ``commit_schema``, keyed by
+        # table root and commit dir alone): reader creation with an
         # explicit schema skips footer inference + a py4j analysis round
         # trip (measured ~180 ms → ~70 ms per group at sf0.1, and the
-        # fast path below collapses G group readers into one). Pure
+        # fast path below collapses G group readers into one). It is
+        # recorded by the first read of a group, never probed for. Pure
         # metadata reuse — every action still scans the parquet files.
         cached = {
-            c: _COMMIT_SCHEMA_CACHE.get((root_abs, c)) for c in groups
+            c: peek(self.spark, "commit_schema", (root_abs, c))
+            for c in groups
         }
         hive = any(
             "=" in seg for f in files for seg in f.split("/")[2:-1]
@@ -860,7 +852,12 @@ class TransactionalTable:
                     *[os.path.join(self.root, f) for f in fs]
                 )
                 if known is None:
-                    _COMMIT_SCHEMA_CACHE[(root_abs, commit)] = df.schema
+                    memo(
+                        self.spark,
+                        "commit_schema",
+                        (root_abs, commit),
+                        lambda: df.schema,
+                    )
                 if need_meta:
                     df = df.select(
                         "*",
@@ -946,13 +943,7 @@ class TransactionalTable:
                     return F.col(f"`{c}`")
 
                 out = out.select(*[col_of(c) for c in order])
-        if len(_READ_PLAN_MEMO) >= _READ_PLAN_MEMO_MAX:
-            try:  # FIFO evict; plans are cheap to rebuild on a miss
-                _READ_PLAN_MEMO.pop(next(iter(_READ_PLAN_MEMO)))
-            except (KeyError, StopIteration, RuntimeError):
-                pass
-        _READ_PLAN_MEMO[memo_key] = out
-        return out
+        return memo(self.spark, "read_plan", memo_key, lambda: out, limit=256)
 
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot read: exactly the files of ``version`` (default:
@@ -2116,6 +2107,19 @@ class TransactionalTable:
                 return pruned
         return mf.files
 
+    @staticmethod
+    def _covered_files(mf: _Manifest, cond_str: str | None) -> frozenset[str]:
+        """The live files every row of which provably matches a SQL
+        string predicate (`predicate_prune.covered_files`); none for a
+        Column predicate."""
+        if cond_str is None:
+            return frozenset()
+        return frozenset(
+            covered_files(
+                cond_str, mf.files, mf.stats or {}, mf.partitions or {}
+            )
+        )
+
     def _rewrite_hit_files(
         self,
         base: int,
@@ -2124,16 +2128,20 @@ class TransactionalTable:
         transform,
         op: str,
         cdf: dict | None = None,
+        dropped: frozenset[str] = frozenset(),
     ) -> int:
         """The file-level copy-on-write rewrite shared by
         :meth:`delete_where` and :meth:`update_where`: restage ONLY the
         hit files through ``transform`` (keeping their hive layout),
-        carry every other file by reference with its stats, keep DV
-        sidecars while carried files may need them (entries on
-        rewritten files become inert — their survivors were staged
-        with the masks applied). ``cdf`` rides the commit record
-        (update_where's CoW change-data image files, advice r9)."""
-        carried = [f for f in mf.files if f not in hit_files]
+        leave the ``dropped`` files out unread, carry every other file
+        by reference with its stats, keep DV sidecars while carried
+        files may need them (entries on rewritten files become inert —
+        their survivors were staged with the masks applied). ``cdf``
+        rides the commit record (update_where's CoW change-data image
+        files, advice r9)."""
+        carried = [
+            f for f in mf.files if f not in hit_files and f not in dropped
+        ]
         staged: list[str] = []
         if hit_files:
             rows = self._read_files(
@@ -2280,13 +2288,7 @@ class TransactionalTable:
                     "overwrite_where: incoming rows must all satisfy "
                     "the replace predicate (Delta replaceWhere contract)"
                 )
-        covered = frozenset(
-            covered_files(
-                cond_str, mf.files, mf.stats or {}, mf.partitions or {}
-            )
-            if cond_str is not None
-            else ()
-        )
+        covered = self._covered_files(mf, cond_str)
         hit_files = self._hit_files(mf, condition, cond_str, covered)
         # keep the hive layout: a partially-replacing rewrite must not
         # demote partitioned files to unpartitioned ones (the
@@ -2370,7 +2372,10 @@ class TransactionalTable:
         ``condition`` is a SQL string); every other file is carried
         untouched in the manifest, so a delete touching one day's key
         range rewrites that day's files, never the table (pre-r7 this
-        re-staged EVERY surviving row). SQL DELETE semantics: a row is
+        re-staged EVERY surviving row). A file the string predicate
+        provably matches in every row (`predicate_prune.covered_files`,
+        e.g. the ``p=1`` file of ``delete_where("p = 1")``) is dropped
+        without being opened. SQL DELETE semantics: a row is
         deleted only when ``condition`` is TRUE — NULL keeps the row (a
         bare ``~condition`` would drop NULL-predicate rows, silently
         deleting data SQL would keep, and diverge from
@@ -2387,13 +2392,15 @@ class TransactionalTable:
         if base is None:
             raise FileNotFoundError(f"no committed version in {self.root}")
         mf = self._read_manifest(base)
-        hit_files = self._hit_files(mf, condition, cond_str)
+        covered = self._covered_files(mf, cond_str)
+        hit_files = self._hit_files(mf, condition, cond_str, covered)
         return self._rewrite_hit_files(
             base,
             mf,
             hit_files,
             lambda rows: rows.filter(~F.coalesce(condition, F.lit(False))),
             "delete",
+            dropped=covered,
         )
 
     def delete_where_dv(self, condition) -> int:

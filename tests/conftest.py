@@ -1,8 +1,12 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, so any copy of the repo tests
+# its own code
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 @pytest.fixture(scope="session")
@@ -15,7 +19,7 @@ def spark():
         shuffle_partitions=4,
         extra_confs={
             "spark.ui.enabled": "false",
-            "spark.sql.warehouse.dir": "/root/repo/.tmp/warehouse",
+            "spark.sql.warehouse.dir": os.path.join(ROOT, ".tmp", "warehouse"),
         },
     )
     spark.sparkContext.setLogLevel("ERROR")

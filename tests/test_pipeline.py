@@ -251,36 +251,52 @@ def test_shared_cache_keyed_by_application_id(spark):
     longer serve a stale persisted frame."""
     from types import SimpleNamespace
 
+    from fefal_etl_spark import cache
     from fefal_etl_spark.cache import keep_checkpoint, local_checkpoint
     from fefal_etl_spark.plans import queries as pq
 
     pq.release_pipeline_cache()
     app_id = spark.sparkContext.applicationId
 
+    def entries(app):
+        return cache._MEMO.get(app, {}).get("pipeline", {})
+
+    def plant(app, key, entry):
+        cache._MEMO.setdefault(app, {}).setdefault("pipeline", {})[key] = (
+            None,
+            entry,
+            pq._drop_pipeline_entry,
+        )
+
     released = []
     # entries own their checkpoints, as _shared's do
     dead_frame = keep_checkpoint(local_checkpoint(spark.range(3)))
     dead_star = SimpleNamespace(unpersist=lambda: released.append("star"))
-    pq._SHARED[("dead-app-123", "/some/sf")] = (
-        SimpleNamespace(frame=dead_frame),
-        {"fact": dead_star},
+    plant(
+        "dead-app-123",
+        "/some/sf",
+        (SimpleNamespace(frame=dead_frame), {"fact": dead_star}),
     )
     live_frame = keep_checkpoint(local_checkpoint(spark.range(4)))
     live_star = SimpleNamespace(unpersist=lambda: released.append("live"))
-    live_key = (app_id, "/other/sf")
-    pq._SHARED[live_key] = (SimpleNamespace(frame=live_frame), {"fact": live_star})
+    live_key = "/other/sf"
+    plant(app_id, live_key, (SimpleNamespace(frame=live_frame), {"fact": live_star}))
 
     try:
         res, star = pq._shared(spark, SF_DIR)
         # the dead application's entry is gone and released ...
-        assert ("dead-app-123", "/some/sf") not in pq._SHARED
+        assert "/some/sf" not in entries("dead-app-123")
         assert released == ["star"]
         assert not _blocks_held(dead_frame)
         # ... the live application's are intact, and the fresh entry is keyed
         # by the real application id
-        assert pq._SHARED[live_key][1]["fact"] is live_star
+        assert entries(app_id)[live_key][1][1]["fact"] is live_star
         assert _blocks_held(live_frame) and live_frame.count() == 4
-        assert (app_id, SF_DIR) in pq._SHARED
+        assert (
+            os.path.abspath(SF_DIR),
+            False,
+            pq._cfg_fingerprint(pq._config()),
+        ) in entries(app_id)
         # a second lookup is a pure cache hit (same objects back)
         res2, star2 = pq._shared(spark, SF_DIR)
         assert res2 is res and star2 is star

@@ -224,10 +224,8 @@ def test_plant_headroom_guard(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from fefal_etl_spark.llm.queries import (
-        _NS_MAX_MEMO,
-        _assert_plant_headroom,
-    )
+    from fefal_etl_spark.cache import _MEMO
+    from fefal_etl_spark.llm.queries import _assert_plant_headroom
 
     ok_dir = tmp_path / "ok"
     bad_dir = tmp_path / "bad"
@@ -248,7 +246,16 @@ def test_plant_headroom_guard(spark, tmp_path):
         _assert_plant_headroom(spark, str(bad_dir), "documents", "doc_id")
     # memoized: second probe of the same key does not re-read
     key = (os.path.abspath(str(bad_dir)), "documents", "doc_id")
-    assert _NS_MAX_MEMO[key] == 1_000_000
+    ns_max = _MEMO[spark.sparkContext.applicationId]["plant_ns_max"]
+    assert ns_max[key][1] == 1_000_000
+    # a fixture rewritten in place in the same session is probed again:
+    # the memo is stamped with the table's fingerprint, not served stale
+    pq.write_table(
+        pa.table({"doc_id": [1, 1_000_000], "text": ["a", "b"]}),
+        str(ok_dir / "documents.parquet"),
+    )
+    with pytest.raises(ValueError, match="namespace collision"):
+        _assert_plant_headroom(spark, str(ok_dir), "documents", "doc_id")
 
 
 # ----------------------------------------------------------------------

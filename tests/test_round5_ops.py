@@ -163,6 +163,7 @@ def test_memos_skip_failed_fingerprint(spark, tmp_path, monkeypatch):
     max(o_orderkey) memo must collect fresh on every call instead of
     caching under a ``None`` key every later dir state would share."""
     import fefal_etl_spark.queries as q
+    from fefal_etl_spark import cache, staging
 
     sf = str(tmp_path)
     loads = []
@@ -171,12 +172,17 @@ def test_memos_skip_failed_fingerprint(spark, tmp_path, monkeypatch):
         loads.append(name)
         return spark_.createDataFrame([(3,), (7,)], "o_orderkey long")
 
+    def unreadable(*_a):
+        raise OSError("stat failed")
+
+    def entries(kind):
+        return cache._MEMO.get(spark.sparkContext.applicationId, {}).get(kind, {})
+
     monkeypatch.setattr(q, "load_table", counting_load)
-    monkeypatch.setattr(q, "_dir_fingerprint", lambda _d: None)
-    monkeypatch.setattr(q, "_ORDERS_MAX_MEMO", {})
+    monkeypatch.setattr(staging, "source_fingerprint", unreadable)
     assert q._orders_max_key(spark, sf) == q._orders_max_key(spark, sf) == 7
     assert loads == ["orders", "orders"]  # two fresh collects
-    assert q._ORDERS_MAX_MEMO == {}
+    assert os.path.abspath(sf) not in entries("orders_max")
 
     calls = []
 
@@ -186,10 +192,10 @@ def test_memos_skip_failed_fingerprint(spark, tmp_path, monkeypatch):
 
     name = sorted(q.PLAN_MEMOIZABLE)[0]
     memo = q._memoized(name, build)
-    monkeypatch.setattr(q, "_PLAN_MEMO", {})
     memo(spark, sf)
     memo(spark, sf)
-    assert len(calls) == 2 and q._PLAN_MEMO == {}
+    assert len(calls) == 2
+    assert (name, os.path.abspath(sf)) not in entries("plan")
 
 
 def test_query_inventory_up_to_date():
