@@ -227,10 +227,15 @@ def stage_parquet(
         frame = df() if callable(df) else df
         frame.write.mode("overwrite").parquet(p)
 
-    path = stage_table(spark, name, fingerprint, _write, scope=scope)
-    # session cache kind ``staged_read``: spark.read.parquet re-lists the
-    # directory and re-reads footers on every call (~0.3-0.4 s of driver
-    # time per staged table per query invocation at sf0.1); the staged
-    # path is content-addressed and its files immutable once published,
-    # so the path alone keys the read plan
+    return read_staged(spark, stage_table(spark, name, fingerprint, _write, scope=scope))
+
+
+def read_staged(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet`` of a :func:`stage_table` path, in the
+    session cache (kind ``staged_read``). A fresh read re-lists the
+    directory and re-reads footers on every call (~0.3-0.4 s of driver
+    time per staged table per query invocation at sf0.1; a partitioned
+    table's listing runs a Spark job); the staged path is
+    content-addressed and its files immutable once published, so the
+    path alone keys the read plan."""
     return memo(spark, "staged_read", path, lambda: spark.read.parquet(path))

@@ -190,7 +190,7 @@ def test_memos_skip_failed_fingerprint(spark, tmp_path, monkeypatch):
         calls.append(sf_dir)
         return spark_.range(1)
 
-    name = sorted(q.PLAN_MEMOIZABLE)[0]
+    name = "job_free_build"
     memo = q._memoized(name, build)
     memo(spark, sf)
     memo(spark, sf)
@@ -200,8 +200,8 @@ def test_memos_skip_failed_fingerprint(spark, tmp_path, monkeypatch):
 
 def test_query_inventory_up_to_date():
     """docs/QUERIES.md must match what tools/gen_query_inventory.py would
-    generate right now (VERDICT r4 item 8: the operator→query→last-
-    driver-green matrix is a checked-in, CI-enforced artifact)."""
+    generate right now (the query→oracle matrix is a checked-in,
+    CI-enforced artifact)."""
     import importlib.util
     import os
 
@@ -213,19 +213,9 @@ def test_query_inventory_up_to_date():
     spec.loader.exec_module(mod)
     with open(os.path.join(repo, "docs", "QUERIES.md")) as f:
         on_disk = f.read()
-    generated = mod.build()
-    if generated == on_disk:
-        return
-    # Driver-column-only drift (a round's CORRECTNESS file landing
-    # post-commit flips driver cells) is benign: self-heal the artifact
-    # instead of failing (VERDICT r7 item 9). Any OTHER drift — queries
-    # added/removed/renamed, oracle status, docstrings — still fails.
-    assert mod.strip_driver(generated) == mod.strip_driver(on_disk), (
-        "docs/QUERIES.md is stale beyond driver-column drift — run: "
-        "python tools/gen_query_inventory.py"
+    assert mod.build() == on_disk, (
+        "docs/QUERIES.md is stale — run: python tools/gen_query_inventory.py"
     )
-    with open(os.path.join(repo, "docs", "QUERIES.md"), "w") as f:
-        f.write(generated)
 
 
 def test_grid_to_df_ragged_rows_keep_extra_columns(spark, tmp_path):

@@ -8,6 +8,7 @@ import decimal
 import math
 import os
 import shutil
+import threading
 
 import pytest
 
@@ -24,7 +25,10 @@ def _entries(spark, kind: str) -> dict:
 def _plan(spark, sf):
     from fefal_etl_spark.queries import get_queries
 
-    get_queries()["pricing_summary"](spark, sf)
+    # on a fresh dir the first build loads lineitem (a Spark job), so
+    # only the second build is stored
+    for _ in range(2):
+        get_queries()["pricing_summary"](spark, sf)
 
 
 def _orders_max(spark, sf):
@@ -215,3 +219,48 @@ def test_regenerated_source_is_never_served_stale_rows(spark, tmp_path):
     finally:
         cache.release("pipeline")
         cache.release("copurchase")
+
+
+def test_plan_stored_only_when_build_ran_no_job(spark):
+    """``queries._memoized`` stores a plan only when building it
+    submitted no Spark job, counting jobs from every thread."""
+    from fefal_etl_spark.queries import _memoized
+
+    builds: dict[str, int] = {}
+
+    def builder(name, job):
+        def fn(spark_, sf_dir):
+            builds[name] = builds.get(name, 0) + 1
+            job(builds[name])
+            return spark_.range(3)
+
+        return _memoized(name, fn)
+
+    def on_thread(_n):
+        t = threading.Thread(target=lambda: spark.range(2).collect())
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive()
+
+    cases = {
+        "job_free": (lambda n: None, [True, True, True]),
+        "counts": (lambda n: spark.range(5).count(), [False, False, False]),
+        "first_call_job": (
+            lambda n: n == 1 and spark.range(5).count(), [False, True, True]
+        ),
+        "thread_job": (on_thread, [False, False, False]),
+    }
+    key = os.path.abspath(SF_DIR)
+    try:
+        for name, (job, want) in cases.items():
+            run = builder(name, job)
+            got = []
+            for _ in want:
+                assert run(spark, SF_DIR).count() == 3
+                got.append((name, key) in _entries(spark, "plan"))
+            assert got == want, name
+        assert builds == {
+            "job_free": 1, "counts": 3, "first_call_job": 2, "thread_job": 3
+        }
+    finally:
+        cache.release("plan", lambda k: k[0] in cases)

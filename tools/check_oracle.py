@@ -2,9 +2,15 @@
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB against the same sf dir, then compares row count, column names, and
-order-insensitive values. Use while iterating:
+order-insensitive values. Each entry is called twice in the session, and
+both results must match: the second call is served from the plan memo
+whenever the first build ran no Spark job. Use while iterating:
 
-    python tools/check_oracle.py [--sf /root/testdata/sf0.01] [names...]
+    python tools/check_oracle.py [--sf DIR] [names...]
+
+``--sf`` defaults to the ``sf0.01`` sibling of the package's default data
+dir. The driver heap defaults to 3g, enough for sf0.01; set
+``SPARK_GRAFT_DRIVER_MEM`` to change it.
 """
 
 from __future__ import annotations
@@ -12,11 +18,13 @@ from __future__ import annotations
 import argparse
 import hashlib
 import math
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -73,14 +81,19 @@ def frame_digest(df) -> tuple[int, list[str], str]:
 
 
 def main():
+    from fefal_etl_spark.datasets import DEFAULT_SF_DIR
+
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    ap.add_argument(
+        "--sf", default=os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01")
+    )
     ap.add_argument("names", nargs="*")
     ap.add_argument("--show-diff", action="store_true")
     args = ap.parse_args()
 
     import duckdb
 
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "3g")
     import __spark_entry__ as entrymod
     from fefal_etl_spark.session import get_spark
 
@@ -101,16 +114,25 @@ def main():
     for name in names:
         t0 = time.time()
         try:
-            sdf = queries[name](spark, args.sf).toPandas()
-            release_tracked()
+            calls = []
+            for _ in range(2):
+                calls.append(queries[name](spark, args.sf).toPandas())
+                release_tracked()
         except Exception:
-            print(f"FAIL  {name}: SPARK ERROR")
+            print(f"FAIL  {name}: SPARK ERROR (call {len(calls) + 1})")
             traceback.print_exc(limit=8)
             n_fail += 1
             continue
         if name not in oracles:
-            print(f"NOOR  {name}: rows={len(sdf)} (rows-only check) [{time.time()-t0:.1f}s]")
-            n_noracle += 1
+            rows = [len(c) for c in calls]
+            ok = rows[0] == rows[1]
+            print(
+                f"{'NOOR' if ok else 'FAIL'}  {name}: rows={rows[0]}"
+                f"{'' if ok else f' then {rows[1]}'} (rows-only check) "
+                f"[{time.time()-t0:.1f}s]"
+            )
+            n_noracle += ok
+            n_fail += not ok
             continue
         try:
             odf = con.execute(oracles[name]).fetchdf()
@@ -120,25 +142,29 @@ def main():
             n_fail += 1
             continue
         try:
-            sn, sc, sh = frame_digest(sdf)
             on, oc, oh = frame_digest(odf)
+            digests = [frame_digest(c) for c in calls]
         except NonScalarError as e:
             print(f"FAIL  {name}: NON-SCALAR output column ({e}) — driver-incanonicalizable")
             n_fail += 1
             continue
-        ok = (sn, sc, sh) == (on, oc, oh)
-        status = "PASS" if ok else "FAIL"
+        bad = [i for i, d in enumerate(digests) if d != (on, oc, oh)]
+        sn, sc, sh = digests[bad[0] if bad else 0]
+        status = "PASS" if not bad else "FAIL"
         print(
             f"{status}  {name}: spark rows={sn} oracle rows={on} "
-            f"hash {'==' if sh == oh else sh + ' != ' + oh} [{time.time()-t0:.1f}s]"
+            f"hash {'==' if sh == oh else sh + ' != ' + oh} "
+            f"{'on both calls' if not bad else f'on call {bad[0] + 1}'} "
+            f"[{time.time()-t0:.1f}s]"
         )
-        if ok:
+        if not bad:
             n_pass += 1
         else:
             n_fail += 1
             if sc != oc:
                 print(f"      cols spark={sc} oracle={oc}")
             if args.show_diff and sc == oc:
+                sdf = calls[bad[0]]
                 s_rows = {
                     "\x1f".join(canon_value(v) for v in t): t
                     for t in sdf[sorted(sdf.columns)].itertuples(index=False, name=None)
@@ -154,7 +180,6 @@ def main():
     print(f"\n{n_pass} pass, {n_fail} fail, {n_noracle} rows-only")
     spark.stop()
     sys.exit(1 if n_fail else 0)
-
 
 if __name__ == "__main__":
     main()

@@ -1,8 +1,8 @@
 """Constrained-heap sf1 run (round 10 — VERDICT r9 item 4).
 
 The sf1 certification sweep ran in a 128 GiB sandbox where nothing
-spills; this tool re-runs the HEAVIEST sf1 queries (top of
-scale_trend.json's sf1 column) under a deliberately small driver heap
+spills; this tool re-runs the HEAVIEST sf1 queries (top of the
+round-9 sf1 scale trend, since retired) under a deliberately small driver heap
 — in local mode the driver heap IS the executor heap, so a 4 GiB cap
 over 32 task threads forces the aggregation/join/sort paths to spill
 rather than rely on headroom. Done-criterion: every query completes,
@@ -25,7 +25,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# top-10 of scale_trend.json's sf1 warm walls (round 9)
+# top-10 of the round-9 sf1 warm walls
 HEAVY = [
     "ppjoin_pairs",
     "semdedup_pairs",

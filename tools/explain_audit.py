@@ -9,11 +9,12 @@ from __future__ import annotations
 
 import argparse
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def plan_text(df) -> str:
@@ -56,10 +57,14 @@ def audit(name: str, text: str) -> list[str]:
 
 
 def main():
+    from fefal_etl_spark.datasets import DEFAULT_SF_DIR
+
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
     ap.add_argument("--full", action="store_true")
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    ap.add_argument(
+        "--sf", default=os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01")
+    )
     args = ap.parse_args()
 
     from fefal_etl_spark.queries import get_queries

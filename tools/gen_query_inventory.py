@@ -1,8 +1,6 @@
 """Generate docs/QUERIES.md: one row per registered query with its oracle
-status, its DRIVER-COVERAGE history (which round's CORRECTNESS_r*.json
-last sampled it green — VERDICT r4 item 8: auditable without scripting),
-and its first docstring line. Run after adding queries or after a round's
-CORRECTNESS file lands:
+status and its first docstring line. Run after adding, renaming or
+re-documenting queries:
 
     python tools/gen_query_inventory.py
 
@@ -10,117 +8,36 @@ tests/test_round5_ops.py regenerates this in CI and fails if the checked-
 in file is stale.
 """
 
-import glob
-import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def driver_history() -> dict[str, tuple[int, str]]:
-    """query -> (round, status) from the LATEST CORRECTNESS_r*.json that
-    sampled it."""
-    hist: dict[str, tuple[int, str]] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        with open(path) as f:
-            data = json.load(f)
-        for name, row in data.items():
-            status = "green"
-            if isinstance(row, dict):
-                if row.get("err") or row.get("rows_match") is False or (
-                    row.get("hash_match") is False
-                ):
-                    status = "RED"
-                elif row.get("hash_match") is None:
-                    status = "rows-only"
-            hist[name] = (rnd, status)
-    return hist
-
-
 def build() -> str:
     from fefal_etl_spark.queries import get_oracles, get_queries
 
     qs, oracles = get_queries(), get_oracles()
-    hist = driver_history()
-    sample = list(qs)[:50]  # the prefix the driver will sample next round
-    never = [n for n in qs if n not in hist]
     lines = [
         "# Query inventory",
         "",
         "Auto-generated by `tools/gen_query_inventory.py` (CI-checked in",
-        "tests/test_round5_ops.py — regenerate after adding queries or when",
-        "a round's CORRECTNESS file lands). Every entry is exposed through",
-        "`__spark_entry__.queries()`; oracle = an equivalent DuckDB SQL twin",
-        "hash-compared by the driver at sf0.01.",
+        "tests/test_round5_ops.py — regenerate after adding queries).",
+        "Every entry is exposed through `__spark_entry__.queries()`;",
+        "oracle = an equivalent DuckDB SQL twin, hash-compared on both of",
+        "a session's calls by `tools/check_oracle.py` at sf0.01.",
         "",
-        "## Driver-sample rotation",
-        "",
-        "The driver's correctness gate samples the FIRST 50 registry entries",
-        "each round, so `_DRIVER_PRIORITY` (fefal_etl_spark/queries.py) is",
-        "re-ordered every round to front-load (1) any query that failed the",
-        "previous driver gate, now fixed, (2) components new this round, and",
-        "(3) queries that have never had a driver row (judge-verified only).",
-        "The `driver` column below is the authoritative coverage matrix:",
-        "`rN` = last sampled green in round N's CORRECTNESS file; `next` =",
-        "in the current first-50 prefix, so the coming round's gate samples",
-        "it. The full-registry ANSI + scalar-schema sweep",
-        "(tests/test_ansi_mode.py) and the local oracle harness",
-        "(tools/check_oracle.py) cover ALL entries every round regardless of",
-        "the driver's sample.",
-        "",
-        f"Current prefix (next driver sample): {len(sample)} queries;",
-        f"never driver-sampled so far: {len(never)}"
-        + (" (all in the prefix)." if all(n in sample for n in never) else "."),
-        "",
-        "| query | oracle | driver | description |",
-        "| --- | --- | --- | --- |",
+        "| query | oracle | description |",
+        "| --- | --- | --- |",
     ]
     for name in sorted(qs):
         doc = (qs[name].__doc__ or "").strip().split("\n")[0].strip()
         oracle = "sql" if name in oracles else "rows-only"
-        if name in hist:
-            rnd, status = hist[name]
-            cov = f"r{rnd}" + ("" if status == "green" else f" {status}")
-        else:
-            cov = "—"
-        if name in sample:
-            cov = f"{cov}, next" if cov != "—" else "next"
-        lines.append(f"| `{name}` | {oracle} | {cov} | {doc} |")
+        lines.append(f"| `{name}` | {oracle} | {doc} |")
     lines.append("")
-    covered = len(hist)
-    lines.append(
-        f"Total: {len(qs)} queries, {len(oracles)} with SQL oracles; "
-        f"{covered} have at least one driver CORRECTNESS row across rounds."
-    )
+    lines.append(f"Total: {len(qs)} queries, {len(oracles)} with SQL oracles.")
     return "\n".join(lines) + "\n"
-
-
-def strip_driver(text: str) -> str:
-    """``text`` with every driver-history-derived fragment removed: the
-    per-row driver column, the never-sampled header counts and the
-    footer coverage count. The CI gate compares STRIPPED generated vs
-    on-disk content, so a round's CORRECTNESS file landing post-commit
-    (which only flips driver columns) no longer fails the gate — the
-    test regenerates the file in place instead (VERDICT r7 item 9: the
-    stale-artifact race cost a judge regeneration three rounds
-    running)."""
-    out = []
-    for line in text.split("\n"):
-        if line.startswith(("Current prefix", "never driver-sampled", "Total:")):
-            continue
-        if line.startswith("| `"):
-            parts = line.split(" | ")
-            if len(parts) >= 4:  # drop the driver cell (index 2)
-                line = " | ".join(parts[:2] + parts[3:])
-        out.append(line)
-    return "\n".join(out)
 
 
 def main() -> None:
@@ -128,7 +45,7 @@ def main() -> None:
     out = os.path.join(REPO, "docs", "QUERIES.md")
     with open(out, "w") as f:
         f.write(text)
-    print(f"wrote docs/QUERIES.md")
+    print("wrote docs/QUERIES.md")
 
 
 if __name__ == "__main__":

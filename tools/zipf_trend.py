@@ -13,8 +13,8 @@ natural-corpus shape); this tool times the df-selectivity-sensitive
 family across the zipf fixture ladder and writes
 ``docs/ZIPF_TREND.json`` + a markdown table for BASELINE.md.
 
-Method mirrors tools/scale_trend.py: one session, per (SF, query) a
-warm-up pass then the timed pass. Run SOLO — concurrent load skews
+Method: one session, per (SF, query) a warm-up pass then the timed
+pass. Run SOLO — concurrent load skews
 wall times.
 
     python tools/gen_sf.py --src /root/testdata/sf0.001 \
