@@ -67,31 +67,49 @@ def normalize_text(col: Column) -> Column:
     return F.coalesce(out, F.lit(""))
 
 
+_PY_ACCENTS = str.maketrans(_ACCENTED, _PLAIN)
+
+
 def _py_strip_accents(text: str) -> str:
-    # NFKD-decompose then drop combining marks — unidecode-equivalent for
-    # Latin scripts (unidecode additionally transliterates non-Latin scripts,
-    # which the reference's pt-PT data never contains).
+    # The Spark table first, then NFKD-decompose and drop combining marks:
+    # NFKD does not decompose ø đ ŧ ł (and capitals), which the table maps;
+    # past the table it is unidecode-equivalent for Latin scripts
+    # (unidecode additionally transliterates non-Latin scripts, which the
+    # reference's pt-PT data never contains).
     return "".join(
-        ch for ch in unicodedata.normalize("NFKD", text) if not unicodedata.combining(ch)
+        ch
+        for ch in unicodedata.normalize("NFKD", text.translate(_PY_ACCENTS))
+        if not unicodedata.combining(ch)
     )
 
 
 def py_normalize_text(text: object) -> str:
-    """Driver-side twin of :func:`normalize_text` (for column-name metadata
-    ops, which operate on Python strings, and for tests)."""
+    r"""Driver-side twin of :func:`normalize_text` (for column-name metadata
+    ops, which operate on Python strings, and for tests). Equal to it on
+    the accent table's characters, ASCII and ASCII whitespace. Known
+    differences past those: NFKD also strips marks and compatibility forms
+    the table lacks (``ǹ`` → ``n``, ``ﬁ`` → ``fi``, ``²`` → ``2``), and
+    Python strips and collapses Unicode whitespace (``\xa0``, ``\u2003``,
+    ``\x1c``-``\x1f``), where Spark's ``\s`` is ASCII only."""
     if not isinstance(text, str) or not text.strip():
         return ""
     text = _py_strip_accents(text.strip())
     return re.sub(r"\s+", " ", text).lower()
 
 
+# Java's ``\s`` and ``.``: ASCII whitespace, and any character but a line
+# terminator
+_JAVA_WS = " \t\n\x0b\x0c\r"
+_BRACKETS = re.compile(r"\[([^\n\r\x85\u2028\u2029]*?)\]")
+
+
 def py_extract_brackets(text: object) -> str:
     """Driver-side twin of :func:`extract_content_in_brackets` for column-name
-    metadata ops (etl_ui.py:57-62)."""
-    m = re.search(r"\[(.*?)\]", str(text))
-    if m:
-        return m.group(1).strip()
-    return str(text).strip()
+    metadata ops (etl_ui.py:57-62), with Java's regex semantics: a bracket
+    group spans no line terminator, and only ASCII whitespace is
+    trimmed."""
+    m = _BRACKETS.search(str(text))
+    return (m.group(1) if m else str(text)).strip(_JAVA_WS)
 
 
 def normalize_text_udf():

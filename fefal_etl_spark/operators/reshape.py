@@ -3,10 +3,10 @@
 The reference iterates rows and columns in Python to emit long-form fact rows
 (etl_ui.py:458-470, 522-556, 589-600, 643-658). Here each becomes one
 ``DataFrame.unpivot`` (Tungsten ``Expand`` under the hood — a narrow,
-shuffle-free operator that emits N rows per input row) followed by a filter
-and a broadcast dim join. At 100 TB the unpivot is embarrassingly parallel;
-the only shuffles in the whole reshape layer are the (broadcast-avoided) dim
-joins — i.e. none.
+shuffle-free operator that emits N rows per input row) followed by a filter;
+``build_star`` then gives each long row its dim id as a literal looked up
+by its header. At 100 TB the unpivot is embarrassingly parallel; the
+reshape layer has no shuffle and no join.
 """
 
 from __future__ import annotations

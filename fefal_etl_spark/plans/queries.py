@@ -662,9 +662,7 @@ def q_star_idempotent_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _res, star = _shared(spark, sf_dir)
     dim1 = star["dim_formacao"].select("id_formacao", "nome_formacao")
-    star2 = build_star(
-        _res, existing_dims={"dim_formacao": dim1}, key_mode="sequential"
-    )
+    star2 = build_star(_res, existing_dims={"dim_formacao": dim1})
     reload_dim = star2["dim_formacao"].select("id_formacao", "nome_formacao")
     extra = spark.createDataFrame([("zumba",)], "nome_formacao string")
     extended = upsert_dim_sequential(

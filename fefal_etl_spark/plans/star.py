@@ -4,9 +4,9 @@ declarative star-schema build (dw_creation.sql:1-93).
 The reference loads row-at-a-time with ``INSERT … RETURNING`` and pairs
 generated fact keys with the pandas positional index (etl_ui.py:459, 523).
 The engine instead generates ``id_inquerito`` *inside Spark* (the ingest row
-key — deterministic, unique) before any fan-out, so every bridge fact joins
-on it with zero driver round-trips; dimension surrogate keys come from the
-upsert operators (hash by default, dense-sequential for reference parity).
+key — deterministic, unique) before any fan-out, so every bridge fact keys
+on it with zero driver round-trips; dimension surrogate keys are dense
+sequential ids, as ``upsert_dim_sequential`` assigns them (reference parity).
 
 Outputs (dw_creation.sql naming):
 - ``fact_inquerito``                                  (43-53)
@@ -16,9 +16,15 @@ Outputs (dw_creation.sql naming):
 - ``dim_preferencia_ensino`` + ``fact_resposta_preferencia`` (25-28, 76-83)
 - ``dim_disponibilidade_horaria`` + ``fact_resposta_disponibilidade`` (35-40, 85-92)
 
-Materialization: the facts read the classified frame ``run_pipeline``
-materialized (its local checkpoint); the dims and lookups are local
-relations built here. ``build_star`` persists nothing. A loader calls
+Materialization: every dimension is a function of the wave's column
+headers and the committed dim rows, so ``build_star`` computes each
+dim's rows and ids on the driver and issues the dim once as a local
+relation; each fact row gets its dim id as a BIGINT literal looked up by
+its header, so the facts read the classified frame ``run_pipeline``
+materialized (its local checkpoint) and join nothing. The Spark jobs
+here are one collect of ``tipos_disponibilidades`` and one of each
+committed dim given in ``existing_dims``. ``build_star`` persists
+nothing. A loader calls
 :func:`release_star_cache` on the thread that ran the wave once every
 table of the wave is written, which frees that checkpoint (and no other
 thread's).
@@ -26,24 +32,21 @@ thread's).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fefal_etl_spark.cache import release_checkpoints
-from fefal_etl_spark.functions import extract_content_in_brackets, normalize_text
 from fefal_etl_spark.functions.text import py_extract_brackets, py_normalize_text
 from fefal_etl_spark.operators import (
-    prefix_join,
     unpivot_availability,
     unpivot_formations,
     unpivot_interests_with_comments,
     unpivot_preferences,
-    upsert_dim_hash,
-    upsert_dim_sequential,
 )
 from fefal_etl_spark.operators.dedup import ROW_KEY
 from fefal_etl_spark.operators.reshape import explode_sentences
 from fefal_etl_spark.plans.pipeline import PipelineResult
+from fefal_etl_spark.predicate_prune import sql_literal
 
 ID_INQ = "id_inquerito"
 
@@ -57,40 +60,64 @@ def release_star_cache() -> None:
     release_checkpoints()
 
 
-def _upsert(existing, incoming, key, id_col, mode: str):
-    fn = upsert_dim_sequential if mode == "sequential" else upsert_dim_hash
-    return fn(existing, incoming, key, id_col)
-
-
 def _local(spark, rows: list[tuple], schema: str) -> DataFrame:
-    """Driver-side rows as an Arrow-backed local relation: consumers scan
-    it as a ``LocalTableScan`` inside the JVM. ``createDataFrame(list)``
-    would instead re-serialize through a ``PythonRDD``, so every scan of
-    a 20-row lookup ran Python-worker tasks."""
+    """Driver-side rows as an Arrow-backed local relation in one
+    partition: consumers scan it as a ``LocalTableScan`` inside the JVM,
+    and a committed dim is one file. ``createDataFrame(list)`` would
+    instead re-serialize through a ``PythonRDD``, so every scan of a
+    20-row lookup ran Python-worker tasks."""
     import pyarrow as pa
     from pyspark.sql.types import _parse_datatype_string
 
     struct = _parse_datatype_string(schema)
     cols = {f.name: [r[i] for r in rows] for i, f in enumerate(struct.fields)}
-    return spark.createDataFrame(pa.table(cols), struct)
+    return spark.createDataFrame(pa.table(cols), struct).coalesce(1)
 
 
-def _localize(df: DataFrame) -> DataFrame:
-    """Run a header-sized frame once and re-issue its rows as a local
-    relation without leaving the JVM: its commit writes a
-    ``LocalTableScan`` and every fact join broadcasts the rows instead of
-    recomputing the upsert's shuffles. One partition, so a committed dim
-    is one file."""
-    spark = df.sparkSession
-    jdf = spark._jsparkSession.createDataFrame(df._jdf.collectAsList(), df._jdf.schema())
-    return DataFrame(jdf.coalesce(1), spark)
+def _driver_upsert(
+    existing: DataFrame | None,
+    by_header: dict[str, tuple],
+    keys: list[str],
+    id_col: str,
+    var: str = "orig",
+) -> tuple[list[tuple], Column]:
+    """``upsert_dim_sequential`` on the driver. Returns the dim's
+    ``(id, *keys)`` rows and each unpivoted row's id, looked up by its
+    header ``var`` in one literal map (BIGINT, as the upsert's ids are:
+    ``id_resposta_interesse`` hashes the id's type). The existing rows
+    stay as they are (one collect); each distinct new key (NULL equals
+    NULL, as in its anti-join) is numbered from ``coalesce(max(id), 0) +
+    1`` in ``Window.orderBy(keys)`` order: ascending, NULLs first,
+    strings by code point, which is Spark's UTF-8 binary order (Java's
+    UTF-16 order differs past U+FFFF)."""
+    rows = []
+    if existing is not None:
+        rows = [tuple(r) for r in existing.select(id_col, *keys).collect()]
+    new = sorted(
+        set(by_header.values()) - {r[1:] for r in rows},
+        key=lambda k: [(v is not None, v) for v in k],
+    )
+    top = max((r[0] for r in rows if r[0] is not None), default=0)
+    rows += [(top + n, *k) for n, k in enumerate(new, 1)]
+    id_of = {r[1:]: r[0] for r in rows}
+    pairs = ", ".join(f"{sql_literal(h)}, {id_of[k]}L" for h, k in by_header.items())
+    return rows, F.expr(f"map({pairs})[`{var}`]").alias(id_col)
+
+
+def _tipo_by_prefix(header: str, tipos: list[tuple]) -> object:
+    """``prefix_join`` on the driver: the id of the tipo whose normalized
+    ``descricao + " -"`` is the longest prefix of the normalized header
+    (a NULL descricao is the empty prefix), or None."""
+    name = py_normalize_text(header)
+    pre = [(py_normalize_text(None if d is None else d + " -"), i) for i, d in tipos]
+    hits = [(len(p), i) for p, i in pre if name.startswith(p)]
+    return max(hits, key=lambda h: h[0])[1] if hits else None
 
 
 def build_star(
     result: PipelineResult,
     existing_dims: dict[str, DataFrame] | None = None,
     tipos_disponibilidades: DataFrame | None = None,
-    key_mode: str = "sequential",
 ) -> dict[str, DataFrame]:
     """Assemble the star schema from the pipeline's valid branch.
 
@@ -99,13 +126,9 @@ def build_star(
     dim driving the J4 prefix match (etl_ui.py:603-621).
 
     Facts stay lazy over ``result.frame``, which ``run_pipeline`` already
-    materialized, so the up to 12 consumers of the valid branch read that
-    one result instead of re-running the EP2 transform. Everything
-    header-sized is a local relation: the header→name lookups are built
-    on the driver (:func:`_local`), and each dimension and the
-    availability header→tipo match run once here and come back as rows
-    (:func:`_localize`). Nothing here is persisted; the caller releases
-    ``result.frame`` with :func:`release_star_cache` after its writes.
+    materialized, and carry their dim ids as literals; dims are local
+    relations (module docstring). The caller releases ``result.frame``
+    with :func:`release_star_cache` after its writes.
     """
     existing_dims = existing_dims or {}
     valid = result.valid.withColumn(ID_INQ, F.col(ROW_KEY))
@@ -136,14 +159,11 @@ def build_star(
     if form_cols:
         # header → dim name: clean + bracket-extract of the normalized header
         # (etl_ui.py:238-239)
-        name_pairs = [(c, py_extract_brackets(py_normalize_text(c))) for c in form_cols]
-        names_df = _local(spark, name_pairs, "orig string, nome_formacao string")
-        dim = _upsert(
+        rows, fact_id = _driver_upsert(
             existing_dims.get("dim_formacao"),
-            names_df.select("nome_formacao"),
-            "nome_formacao",
+            {c: (py_extract_brackets(py_normalize_text(c)),) for c in form_cols},
+            ["nome_formacao"],
             "id_formacao",
-            key_mode,
         )
         # DW schema parity (dw_creation.sql:6-18): DimFormacao declares a
         # self-referencing base-formation key and a group-dim FK. The
@@ -151,25 +171,19 @@ def build_star(
         # only id/nome), so they are emitted as typed NULLs and the group dim
         # as an empty-but-typed relation — a downstream consumer of the
         # star sees the declared shape.
-        if "id_formacao_base" not in dim.columns:
-            dim = dim.withColumn(
-                "id_formacao_base", F.lit(None).cast("long")
-            ).withColumn("id_grupo_formacao", F.lit(None).cast("long"))
-        dim = out["dim_formacao"] = _localize(dim)
+        out["dim_formacao"] = _local(
+            spark,
+            [(*r, None, None) for r in rows],
+            "id_formacao bigint, nome_formacao string, "
+            "id_formacao_base bigint, id_grupo_formacao bigint",
+        )
         out["dim_grupo_formacao"] = existing_dims.get(
             "dim_grupo_formacao",
-            _local(
-                spark,
-                [],
-                "id_grupo_formacao bigint, nome_grupo string, "
-                "descrissao_grupo string",  # [sic] dw_creation.sql:9
-            ),
+            _local(spark, [], "id_grupo_formacao bigint, nome_grupo string, "
+                   "descrissao_grupo string"),  # [sic] dw_creation.sql:9
         )
         long = unpivot_formations(valid, ID_INQ, form_cols, var_name="orig")
-        long = long.join(F.broadcast(names_df), on="orig").drop("orig")
-        out["fact_resposta_formacao"] = long.join(
-            F.broadcast(dim), on="nome_formacao"
-        ).select(ID_INQ, "id_formacao", "n_formandos")
+        out["fact_resposta_formacao"] = long.select(ID_INQ, fact_id, "n_formandos")
 
     # --- interesses: R2 + comentário explode (etl_ui.py:496-564) -----------
     # The reference normalizes interest-block headers first (etl_ui.py:251,
@@ -184,27 +198,21 @@ def build_star(
         }
         valid_int = valid.withColumnsRenamed(int_renames)
         norm_value_cols = [py_normalize_text(c) for c in value_cols]
-        dim_inc = _local(spark, [(c,) for c in norm_value_cols], "nome_area string")
-        dim_area = out["dim_area_tematica"] = _localize(
-            _upsert(
-                existing_dims.get("dim_area_tematica"),
-                dim_inc,
-                "nome_area",
-                "id_interesse",
-                key_mode,
-            )
+        rows, fact_id = _driver_upsert(
+            existing_dims.get("dim_area_tematica"),
+            {n: (n,) for n in norm_value_cols},
+            ["nome_area"],
+            "id_interesse",
+            var="nome_area",
+        )
+        out["dim_area_tematica"] = _local(
+            spark, rows, "id_interesse bigint, nome_area string"
         )
         interests = unpivot_interests_with_comments(
             valid_int, ID_INQ, norm_value_cols, comment_suffix="[comentario]"
         )
-        fact_int = interests.join(
-            F.broadcast(dim_area), interests.nome_area == dim_area.nome_area
-        ).select(
-            interests[ID_INQ],
-            "id_interesse",
-            "tem_interesse",
-            "n_formandos",
-            "texto_comentario",
+        fact_int = interests.select(
+            ID_INQ, fact_id, "tem_interesse", "n_formandos", "texto_comentario"
         )
         # stable bridge-fact key so comments can reference their fact row
         fact_int = fact_int.withColumn(
@@ -225,57 +233,45 @@ def build_star(
     # --- preferências: R3 (etl_ui.py:567-600) ------------------------------
     pref_cols = result.groups.get("tipo de ensino", [])
     if pref_cols:
-        pref_pairs = [(c, py_normalize_text(c)) for c in pref_cols]
-        pref_names = _local(
-            spark, pref_pairs, "orig string, descricao_preferencia string"
+        rows, fact_id = _driver_upsert(
+            existing_dims.get("dim_preferencia_ensino"),
+            {c: (py_normalize_text(c),) for c in pref_cols},
+            ["descricao_preferencia"],
+            "id_preferencia",
         )
-        dim_pref = out["dim_preferencia_ensino"] = _localize(
-            _upsert(
-                existing_dims.get("dim_preferencia_ensino"),
-                pref_names.select("descricao_preferencia"),
-                "descricao_preferencia",
-                "id_preferencia",
-                key_mode,
-            )
+        out["dim_preferencia_ensino"] = _local(
+            spark, rows, "id_preferencia bigint, descricao_preferencia string"
         )
         long = unpivot_preferences(valid, ID_INQ, pref_cols, var_name="orig")
-        long = long.join(F.broadcast(pref_names), on="orig").drop("orig")
-        out["fact_resposta_preferencia"] = long.join(
-            F.broadcast(dim_pref), on="descricao_preferencia"
-        ).select(ID_INQ, "id_preferencia", "valor_preferencia")
+        out["fact_resposta_preferencia"] = long.select(
+            ID_INQ, fact_id, "valor_preferencia"
+        )
 
     # --- disponibilidade: J4 prefix + F3 + R4 (etl_ui.py:603-658) ----------
     disp_cols = result.groups.get("disponibilidade", [])
     if disp_cols:
-        headers = _local(spark, [(c,) for c in disp_cols], "orig string")
+        tipos, tipo_type = [], "int"
         if tipos_disponibilidades is not None:
-            matched = prefix_join(headers, tipos_disponibilidades, "orig")
-        else:
-            matched = headers.withColumn("id_tipo_disp", F.lit(None).cast("int"))
-        matched = _localize(
-            matched.withColumn(
-                "descricao_horario", extract_content_in_brackets(F.col("orig"))
-            )
+            t = tipos_disponibilidades.select("id_tipo_disp", "descricao_tipo_disp")
+            tipos = [tuple(r) for r in t.collect()]
+            tipo_type = t.schema["id_tipo_disp"].dataType.simpleString()
+        # header → (horário in brackets, tipo by prefix); id_tipo_disp is
+        # NULL for a header no tipo prefixes, and NULL matches NULL in the
+        # dim key
+        rows, fact_id = _driver_upsert(
+            existing_dims.get("dim_disponibilidade_horaria"),
+            {c: (py_extract_brackets(c), _tipo_by_prefix(c, tipos)) for c in disp_cols},
+            ["descricao_horario", "id_tipo_disp"],
+            "id_horario",
         )
-        dim_hor = out["dim_disponibilidade_horaria"] = _localize(
-            _upsert(
-                existing_dims.get("dim_disponibilidade_horaria"),
-                matched.select("descricao_horario", "id_tipo_disp"),
-                ["descricao_horario", "id_tipo_disp"],
-                "id_horario",
-                key_mode,
-            )
+        out["dim_disponibilidade_horaria"] = _local(
+            spark,
+            rows,
+            f"id_horario bigint, descricao_horario string, id_tipo_disp {tipo_type}",
         )
         long = unpivot_availability(valid, ID_INQ, disp_cols, var_name="orig")
-        long = long.join(F.broadcast(matched), on="orig")
-        # null-safe: id_tipo_disp is NULL for headers without a matching
-        # tipo (or when no tipos dim is supplied) — a plain equi-join would
-        # silently drop every such fact row (NULL != NULL).
-        dim_cond = long["descricao_horario"].eqNullSafe(
-            dim_hor["descricao_horario"]
-        ) & long["id_tipo_disp"].eqNullSafe(dim_hor["id_tipo_disp"])
-        out["fact_resposta_disponibilidade"] = long.join(
-            F.broadcast(dim_hor), on=dim_cond
-        ).select(long[ID_INQ], dim_hor["id_horario"], long["tem_disponibilidade"])
+        out["fact_resposta_disponibilidade"] = long.select(
+            ID_INQ, fact_id, "tem_disponibilidade"
+        )
 
     return out

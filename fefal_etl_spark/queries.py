@@ -1677,7 +1677,7 @@ def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     practice: the table is written `partitionBy(o_orderstatus)` once, and
     the status filter prunes to ONE directory before any IO (shows up as
     PartitionFilters in the scan, not a row filter)."""
-    from fefal_etl_spark.staging import source_fingerprint, stage_table
+    from fefal_etl_spark.staging import read_staged, source_fingerprint, stage_table
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"
@@ -1691,7 +1691,7 @@ def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(p),
     )
     return (
-        spark.read.parquet(path)
+        read_staged(spark, path)
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_custkey", "o_totalprice")
     )

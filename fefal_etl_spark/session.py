@@ -73,6 +73,13 @@ def get_spark(
     ``shuffle_partitions`` defaults to the local core count — correct for
     local mode; on a cluster leave AQE's coalescing to right-size post-shuffle
     partitions (initial partition num can stay high).
+
+    ``spark.python.sql.dataFrameDebugging.enabled`` is off: with it on,
+    every ``F.*``/Column call walks the Python stack and makes about five
+    extra py4j calls to record its call site, which made up a third of
+    a cold survey wave's plan-building time. The trade: an error raised
+    when an action runs no longer names the Python line that built the
+    failing column.
     """
     cpus = default_parallelism()
     # Driver heap: Spark's 1g default is sized for a thin cluster driver,
@@ -103,6 +110,8 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.showConsoleProgress", "false")
+        # static: a session's Column calls skip the call-site capture
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -103,7 +103,7 @@ def fixtures(spark, config):
     registry = spark.createDataFrame(REGISTRY_ROWS, REGISTRY_SCHEMA)
     tipos = _tipos(spark)
     result = run_pipeline(survey, registry, config)
-    star = build_star(result, tipos_disponibilidades=tipos, key_mode="sequential")
+    star = build_star(result, tipos_disponibilidades=tipos)
     return result, star
 
 
@@ -213,10 +213,9 @@ def test_group_validation(config):
 
 def test_star_without_tipos_keeps_availability_facts(spark, config, fixtures):
     # id_tipo_disp is NULL everywhere when no tipos dim is supplied; the
-    # null-safe dim join must still produce every availability fact row.
+    # null-safe dim key must still give every availability fact row an id.
     result, star_with = fixtures
-    star_without = build_star(result, tipos_disponibilidades=None,
-                              key_mode="sequential")
+    star_without = build_star(result, tipos_disponibilidades=None)
     n_with = star_with["fact_resposta_disponibilidade"].count()
     n_without = star_without["fact_resposta_disponibilidade"].count()
     assert n_with > 0
@@ -505,9 +504,9 @@ def _final_plan(df) -> str:
 
 
 def test_star_small_frames_are_local_relations(spark, config):
-    """The header→name lookups, the dims, the empty group dim and the
-    availability header→tipo match run as LocalTableScans; the one RDD
-    scan left in a fact is the wave run_pipeline materialized."""
+    """The dims and the empty group dim run as LocalTableScans; each fact
+    scans the wave run_pipeline materialized once and joins nothing: its
+    dim ids are literals."""
     from fefal_etl_spark.plans.star import release_star_cache
 
     registry = spark.createDataFrame(REGISTRY_ROWS, REGISTRY_SCHEMA)
@@ -521,10 +520,111 @@ def test_star_small_frames_are_local_relations(spark, config):
                 assert "ExistingRDD" not in plan, (name, plan)
             else:
                 assert plan.count("Scan ExistingRDD") == 1, (name, plan)
-                if name != "fact_inquerito":
-                    assert "LocalTableScan" in plan, name
+                assert "Join" not in plan, (name, plan)
+                assert "BroadcastExchange" not in plan, (name, plan)
     finally:
         release_star_cache()
+
+
+def test_cold_star_build_runs_one_job_and_fact_commits_one_each(
+    spark, config, tmp_path
+):
+    """With no existing dims, build_star's one job is the collect of the
+    tipos; committing each of the 6 facts is its write job alone (no
+    broadcast of a header lookup)."""
+    from fefal_etl_spark.plans.star import release_star_cache
+    from fefal_etl_spark.queries import _jobs_submitted as _jobs
+    from fefal_etl_spark.table import TransactionalTable
+
+    registry = spark.createDataFrame(REGISTRY_ROWS, REGISTRY_SCHEMA)
+    result = run_pipeline(_survey(spark), registry, config)
+    tipos = _tipos(spark)
+    try:
+        before = _jobs(spark)
+        star = build_star(result, tipos_disponibilidades=tipos)
+        assert _jobs(spark) - before <= 1
+        facts = [n for n in star if not n.startswith("dim_")]
+        assert len(facts) == 6, facts
+        tables = {n: TransactionalTable(spark, str(tmp_path / n)) for n in facts}
+        before = _jobs(spark)
+        for n in facts:
+            tables[n].append(star[n])
+        assert _jobs(spark) - before == 6
+    finally:
+        release_star_cache()
+
+
+HEADERS = ["h0 'q' \\ [x]", "h1\nline", "h2 `tick`", "h3 '' ", "h4", "h5", "h6", "h7"]
+
+
+@pytest.mark.parametrize(
+    "existing, incoming, keys, schema",
+    [
+        # NULL, accented and mixed-case keys, first load
+        (None, [("Zeta",), ("alpha",), (None,), ("Ångström",), ("ÁRVORE",),
+                ("árvore",), ("beta",), ("alpha",)],
+         ["k"], "id bigint, k string"),
+        # an existing dim whose ids have gaps, holding a NULL key
+        ([(3, "alpha"), (10, "gamma"), (7, None)],
+         [("gamma",), (None,), ("Beta",), ("beta",), ("ação",)],
+         ["k"], "id bigint, k string"),
+        # the composite (descricao, NULL tipo) key, null-safe against the dim
+        ([(1, "tarde", None), (2, "manha", 1)],
+         [("manha", 1), ("tarde", None), ("noite", None), ("manha", None),
+          ("noite", 2), ("Noite", None)],
+         ["d", "t"], "id bigint, d string, t int"),
+        # a supplementary-plane character next to U+FFxx ones: UTF-8
+        # order, not Java's UTF-16 order
+        (None, [("\U0001F600",), ("\uFF21",), ("\uFFFD",), ("a",), ("\U00010000",)],
+         ["k"], "id bigint, k string"),
+    ],
+)
+def test_driver_dim_ids_equal_upsert_dim_sequential(
+    spark, existing, incoming, keys, schema
+):
+    """The driver upsert gives the dim rows and ids upsert_dim_sequential
+    gives, and each header's literal id is its key's id."""
+    from fefal_etl_spark.operators.upsert import upsert_dim_sequential
+    from fefal_etl_spark.plans.star import _driver_upsert
+
+    def rows_of(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    ex = None if existing is None else spark.createDataFrame(existing, schema)
+    inc = spark.createDataFrame(incoming, schema.split(", ", 1)[1])
+    want = rows_of(upsert_dim_sequential(ex, inc, keys, "id"))
+    by_header = dict(zip(HEADERS, incoming))
+    rows, fact_id = _driver_upsert(ex, by_header, keys, "id")
+    assert sorted(rows, key=repr) == want
+    id_of = {r[1:]: r[0] for r in want}
+    heads = spark.createDataFrame([(h,) for h in by_header], "orig string")
+    got = heads.select("orig", fact_id)
+    assert got.schema["id"].dataType.simpleString() == "bigint"
+    assert dict(map(tuple, got.collect())) == {
+        h: id_of[k] for h, k in by_header.items()
+    }
+
+
+def test_driver_tipo_match_equals_prefix_join(spark):
+    """The longest normalized prefix wins on the driver as in prefix_join,
+    also when one tipo is a prefix of another."""
+    from fefal_etl_spark.operators import prefix_join
+    from fefal_etl_spark.plans.star import _tipo_by_prefix
+
+    tipos = [(1, "Presencial"), (2, "Presencial - Manhã"), (3, "Online"),
+             (4, "Ónline - Extra")]
+    headers = ["Presencial - [Tarde]", "Presencial - Manha - [Seg]",
+               "PRESENCIAL  -  manhã - x", "Online - [Noite]",
+               "online - extra - [Sáb]", "Misto - [Dom]"]
+    tipos_df = spark.createDataFrame(
+        tipos, "id_tipo_disp int, descricao_tipo_disp string"
+    )
+    heads = spark.createDataFrame([(h,) for h in headers], "orig string")
+    want = {r["orig"]: r["id_tipo_disp"]
+            for r in prefix_join(heads, tipos_df, "orig").collect()}
+    assert want == {h: _tipo_by_prefix(h, tipos) for h in headers}
+    assert want["Presencial - Manha - [Seg]"] == 2
+    assert want["Misto - [Dom]"] is None
 
 
 def test_wave_commit_scans_registry_once(spark, config, tmp_path):

@@ -12,11 +12,12 @@ Python ``str.isdigit`` accepts unicode digits the reference never sees.
 import pytest
 import re
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from fefal_etl_spark.functions import (
+    extract_content_in_brackets,
     is_numeric_string,
     normalize_text,
     py_normalize_text,
@@ -24,6 +25,7 @@ from fefal_etl_spark.functions import (
     split_sentences_portable,
     validate_numeric,
 )
+from fefal_etl_spark.functions.text import _ACCENTED, py_extract_brackets
 
 SETTLE = settings(
     max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow]
@@ -55,6 +57,31 @@ def test_normalize_idempotent(spark, texts):
     once = batch(spark, normalize_text, texts)
     twice = batch(spark, normalize_text, once)
     assert once == twice
+
+
+# ASCII whitespace, as Java's regex ``\s`` reads it
+ASCII_WS = " \t\n\r\x0b\x0c"
+
+
+@SETTLE
+@given(st.lists(st.text(alphabet=_ACCENTED + ASCII_WS + "aZ", max_size=40),
+                min_size=1, max_size=30))
+@example(["Ø ł\x0bđ", "\tŦ\r"])
+def test_normalize_twin_matches_on_the_accent_table(spark, texts):
+    """The driver twin equals Spark's normalize_text on every character
+    of the accent table, mixed with ASCII whitespace."""
+    assert batch(spark, normalize_text, texts) == [py_normalize_text(t) for t in texts]
+
+
+@SETTLE
+@given(st.lists(st.text(alphabet="[]" + ASCII_WS + "aøÉ", max_size=20),
+                min_size=1, max_size=30))
+@example(["[a\rb]", " [ x\x0c] ", "[]", "ø [\n]"])
+def test_extract_brackets_twin_matches_spark(spark, texts):
+    """py_extract_brackets follows Java's regex: a bracket group spans no
+    line terminator, and the trim is ASCII whitespace only."""
+    got = batch(spark, extract_content_in_brackets, texts)
+    assert got == [py_extract_brackets(t) for t in texts]
 
 
 REF_SPLIT = r"(?<=[.!?;/|])\s+|,\s+(?=[A-ZÁÉÍÓÚÂÊÎÔÛÃÕÇ])"

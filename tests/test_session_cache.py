@@ -264,3 +264,23 @@ def test_plan_stored_only_when_build_ran_no_job(spark):
         }
     finally:
         cache.release("plan", lambda k: k[0] in cases)
+
+
+def test_partitioned_scan_plan_is_stored(spark):
+    """partitioned_scan reads its staged table through the staged-read
+    memo, so its second build runs no Spark job (no listing of the
+    partitioned directory) and the plan memo stores it."""
+    from fefal_etl_spark.queries import _jobs_submitted, get_queries
+
+    q = get_queries()["partitioned_scan"]
+    key = ("partitioned_scan", os.path.abspath(SF_DIR))
+    cache.release("plan", lambda k: k == key)
+    try:
+        first = q(spark, SF_DIR).collect()  # may stage and list: jobs
+        jobs = _jobs_submitted(spark)
+        df = q(spark, SF_DIR)
+        assert _jobs_submitted(spark) == jobs
+        assert key in _entries(spark, "plan")
+        assert sorted(df.collect()) == sorted(first)
+    finally:
+        cache.release("plan", lambda k: k == key)
