@@ -13,10 +13,13 @@ only — no base-table access.
 `table.TransactionalTable`:
 
 * the DELTA comes from :meth:`~fefal_etl_spark.table.TransactionalTable.
-  row_deltas`, which derives it from the commit log — an append refresh
-  reads only the appended files, a deletion-vector delete refresh reads
-  only the newly-masked files, so refresh cost is O(changed data + view),
-  never O(base);
+  row_deltas`, the ±1 projection of the table's change feed, which reads
+  each commit's change units from the commit log
+  (`table.change_units`) — an append refresh reads only the appended
+  files, a deletion-vector delete refresh only the files the new
+  vectors address, so refresh cost is O(changed data + view), never
+  O(base); a refresh spanning several commits reads each commit's
+  changed files;
 * the view STATE is itself a transactional table (atomic publish, time
   travel over refresh history), and the applied source version rides in
   the manifest's txn ledger — a crashed-and-replayed refresh is skipped

@@ -177,10 +177,12 @@ def build_star(
             "id_formacao bigint, nome_formacao string, "
             "id_formacao_base bigint, id_grupo_formacao bigint",
         )
-        out["dim_grupo_formacao"] = existing_dims.get(
-            "dim_grupo_formacao",
-            _local(spark, [], "id_grupo_formacao bigint, nome_grupo string, "
-                   "descrissao_grupo string"),  # [sic] dw_creation.sql:9
+        grupo = existing_dims.get("dim_grupo_formacao")
+        out["dim_grupo_formacao"] = (
+            grupo
+            if grupo is not None
+            else _local(spark, [], "id_grupo_formacao bigint, nome_grupo string, "
+                        "descrissao_grupo string")  # [sic] dw_creation.sql:9
         )
         long = unpivot_formations(valid, ID_INQ, form_cols, var_name="orig")
         out["fact_resposta_formacao"] = long.select(ID_INQ, fact_id, "n_formandos")

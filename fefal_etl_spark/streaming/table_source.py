@@ -700,60 +700,33 @@ class TxnTableStreamDataSource(DataSource):
 
 
 class _CdfPartition(InputPartition):
-    """One (file, kind) unit of a CDF micro-batch.
+    """One read task of a CDF micro-batch: a `table.ChangeUnit`, the
+    table root its paths are relative to, and the stream's fixed
+    projection (partition columns, schema ops, declared schema). The
+    executor masks the file's rows by position with the unit's
+    sidecars — the positional contract the batch reader resolves with
+    ``_metadata.row_index``."""
 
-    kind:
-      * ``insert``        — rows of a file ADDED by `version` (minus any
-                            positions the same snapshot's vectors already
-                            mask);
-      * ``delete_removed``— rows of a file REMOVED by `version`, as they
-                            were visible at version-1 (old vectors
-                            applied);
-      * ``delete_masked`` — only the positions NEWLY masked by
-                            `version`'s deletion vectors on a retained
-                            file.
-
-    DV sidecar PATHS travel in the partition (they are small parquet
-    files); the executor loads the relevant positions and masks batches
-    by the file-local row index — the same positional contract the
-    batch-side `row_deltas` resolves with `_metadata.row_index`."""
-
-    def __init__(
-        self,
-        kind: str,
-        path: str,
-        rel: str,
-        version: int,
-        dv_new: list[str],
-        dv_old: list[str],
-    ):
-        self.kind = kind
-        self.path = path
-        self.rel = rel
-        self.version = version
-        self.dv_new = dv_new
-        self.dv_old = dv_old
+    def __init__(self, unit, root: str, pcols, col_ops, schema_arrow):
+        self.unit = unit
+        self.root = root
+        self.pcols = pcols
+        self.col_ops = col_ops
+        self.schema_arrow = schema_arrow
 
 
 class TxnTableChangesStreamReader(DataSourceStreamReader):
     """Offsets are manifest versions, like the append-only reader — but
     each micro-batch is the CHANGE feed of versions (start, end]: data
     columns plus ``_change_type`` (insert / delete / update_preimage /
-    update_postimage) and ``_commit_version``. DV-backed updates
-    (`update_where_dv` / `merge_dv`) surface Delta-parity UPDATE images
-    (round 9): the commit record's ``cdf.postimage`` list marks which
-    added files are postimages, and the newly-masked rows are the
-    preimages — CDC consumers keyed on pre/post rows work unchanged.
-    Copy-on-write UPDATE commits (round 10, advice r9) carry explicit
-    change-data image files (``cdf.cow_pre``/``cow_post``): the stream
-    emits exactly those images, nothing for carried survivors. Cost is
-    proportional to the CHANGED files: appends ship only added files,
-    DV deletes only the files the new vector entries address; CoW
-    DELETE rewrites degenerate to full old(-1)/new(+1), exactly like
-    `table.row_deltas`. ``maxFilesPerTrigger``/``maxBytesPerTrigger``
-    (round 10) split large commits across micro-batches at CDF-unit
-    granularity — offsets gain the same intra-commit index as the
-    append reader (see `_RateLimit`)."""
+    update_postimage) and ``_commit_version``, the rows
+    ``TransactionalTable.change_feed`` returns for the same range. Both
+    read the units `table.change_units` derives from each commit
+    record; here each unit is one task, read with pyarrow on the
+    worker. ``maxFilesPerTrigger``/``maxBytesPerTrigger`` (round 10)
+    split large commits across micro-batches at unit granularity —
+    offsets gain the same intra-commit index as the append reader (see
+    `_RateLimit`)."""
 
     def __init__(self, options: dict, schema=None):
         from fefal_etl_spark.catalog import root_from_options
@@ -765,10 +738,10 @@ class TxnTableChangesStreamReader(DataSourceStreamReader):
         )
         # rate limiting (round 10): same maxFilesPerTrigger /
         # maxBytesPerTrigger contract as the append reader; a "unit"
-        # here is one _CdfPartition (one file×kind read)
+        # here is one change unit (one _CdfPartition)
         self.limit = _RateLimit(options)
         self.limit.resync({"version": self.start_version})
-        # version -> (ordered parts, resolved state) — versions are
+        # version -> (ordered units, resolved state) — versions are
         # immutable, so admission and planning share one computation
         self._parts_memo: dict[int, tuple[list, dict]] = {}
 
@@ -800,8 +773,8 @@ class TxnTableChangesStreamReader(DataSourceStreamReader):
             self.root,
             latest,
             lambda v: [
-                (p.rel, os.path.getsize(p.path))
-                for p in self._version_parts(v)[0]
+                (u.rel, os.path.getsize(os.path.join(self.root, u.rel)))
+                for u in self._version_parts(v)[0]
             ],
         )
         off = self.limit.stamp(off)  # BEFORE resync: wm = committed floor
@@ -809,96 +782,22 @@ class TxnTableChangesStreamReader(DataSourceStreamReader):
         return off
 
     def _version_parts(self, v: int) -> tuple[list, dict]:
-        """The DETERMINISTIC ordered CDF units of one version plus its
-        resolved state — the single enumeration both admission and
-        partition planning slice, so an intra-commit offset index
-        always addresses the same unit."""
+        """`table.change_units` of version v, memoized: admission and
+        partition planning slice the same ordered units, so an
+        intra-commit offset index always addresses the same unit."""
         hit = self._parts_memo.get(v)
-        if hit is not None:
-            return hit
-        from fefal_etl_spark.table import _apply_record
+        if hit is None:
+            from fefal_etl_spark.table import change_units
 
-        if (v - 1) in self._parts_memo:
-            prev_state = self._parts_memo[v - 1][1]
-        else:
-            prev_state = _snapshot(self.root, v - 1) if v > 0 else None
-        rec = _record(self.root, v)
-        cur_mf = _apply_record(prev_state, rec)
-        prev_mf = prev_state or {"files": [], "dv_files": []}
-        # CDF update images (round 9, Delta parity): a DV-backed
-        # UPDATE/MERGE commit recorded which added files are UPDATE
-        # postimages; its newly-masked rows are the preimages
-        post = set((rec.get("cdf") or {}).get("postimage") or [])
-        is_upd = rec.get("op") in ("update-dv", "merge-dv")
-        prev = set(prev_mf["files"])
-        cur = set(cur_mf["files"])
-        dv_new = [
-            os.path.join(self.root, f)
-            for f in cur_mf.get("dv_files") or []
-        ]
-        dv_old = [
-            os.path.join(self.root, f)
-            for f in prev_mf.get("dv_files") or []
-        ]
-        out: list[_CdfPartition] = []
-
-        def part(kind: str, rel: str) -> None:
-            p_ = _CdfPartition(
-                kind, os.path.join(self.root, rel), rel, v, dv_new, dv_old
+            prev = self._parts_memo.get(v - 1)
+            if prev is not None:
+                prev_state = prev[1]
+            else:
+                prev_state = _snapshot(self.root, v - 1) if v > 0 else None
+            hit = self._parts_memo[v] = change_units(
+                self.root, v, prev_state
             )
-            p_.pcols = self.pcols
-            p_.col_ops = self.col_ops
-            p_.schema_arrow = self.schema_arrow
-            out.append(p_)
-
-        # CoW UPDATE with recorded change-data files (advice r9):
-        # the add/remove diff mixes survivors with images — emit
-        # ONLY the recorded image files (Delta parity; survivors
-        # emit nothing). Image files are never DV-addressed, so
-        # the postimage leg reuses the unmasked full-file read.
-        cow_pre = (rec.get("cdf") or {}).get("cow_pre") or []
-        cow_post = (rec.get("cdf") or {}).get("cow_post") or []
-        if cow_pre or cow_post:
-            for rel in cow_pre:
-                part("update_preimage_cow", rel)
-            for rel in cow_post:
-                part("update_postimage", rel)
-            self._parts_memo[v] = (out, cur_mf)
-            return out, cur_mf
-        for rel in cur_mf["files"]:
-            if rel not in prev:
-                part(
-                    "update_postimage" if rel in post else "insert", rel
-                )
-        for rel in prev_mf["files"]:
-            if rel not in cur:
-                part("delete_removed", rel)
-        # vector changes on RETAINED files: compare the sidecar SETS
-        # (append-only is the common case, but restore() can replace
-        # or drop the list — a length-based slice would miss that).
-        # Sidecars only in cur may mask rows (deletes); sidecars only
-        # in prev may UN-mask rows (re-inserts, e.g. restore to a
-        # pre-delete snapshot). The reader resolves exact positions
-        # by diffing both sides per file, so over-shipping a file
-        # here costs a scan, never correctness.
-        changed_sidecars = set(dv_new).symmetric_difference(dv_old)
-        if changed_sidecars and (prev & cur):
-            import pyarrow.parquet as pq
-
-            touched: set[str] = set()
-            for sc in changed_sidecars:
-                touched.update(
-                    pq.read_table(sc, columns=["file"])
-                    .column("file")
-                    .to_pylist()
-                )
-            for rel in sorted(touched & (prev & cur)):
-                part(
-                    "update_preimage" if is_upd else "delete_masked", rel
-                )
-                part("insert_unmasked", rel)
-        self._parts_memo[v] = (out, cur_mf)
-        return out, cur_mf
+        return hit
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         start = self.limit.clamp_start(start, end)
@@ -911,80 +810,66 @@ class TxnTableChangesStreamReader(DataSourceStreamReader):
         floor = v0 if i0 is None else v0 - 1
         out: list[_CdfPartition] = []
         for v in range(max(floor, -1) + 1, v1 + 1):
-            parts, _state = self._version_parts(v)
+            units, _state = self._version_parts(v)
             lo = i0 if (i0 is not None and v == v0) else 0
-            hi = i1 if (i1 is not None and v == v1) else len(parts)
-            out.extend(parts[lo:hi])
+            hi = i1 if (i1 is not None and v == v1) else len(units)
+            out.extend(
+                _CdfPartition(
+                    u, self.root, self.pcols, self.col_ops, self.schema_arrow
+                )
+                for u in units[lo:hi]
+            )
         return out
 
     def read(self, partition: _CdfPartition) -> Iterator:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        def positions(paths: list[str]) -> set[int]:
+        from fefal_etl_spark.arrow_meta import project_batch
+
+        u = partition.unit
+
+        def positions(sidecars) -> set[int]:
             pos: set[int] = set()
-            for p in paths:
-                t = pq.read_table(p, columns=["file", "pos"])
-                files = t.column("file").to_pylist()
-                ps = t.column("pos").to_pylist()
+            for sc in sidecars:
+                t = pq.read_table(
+                    os.path.join(partition.root, sc), columns=["file", "pos"]
+                )
                 pos.update(
-                    p_ for f_, p_ in zip(files, ps) if f_ == partition.rel
+                    p
+                    for f, p in zip(
+                        t.column("file").to_pylist(),
+                        t.column("pos").to_pylist(),
+                    )
+                    if f == u.rel
                 )
             return pos
 
-        if partition.kind in ("insert", "update_postimage"):
-            keep_if_in, mask = False, positions(partition.dv_new)
-            change = partition.kind
-        elif partition.kind == "update_preimage_cow":
-            # a CoW change-data preimage file: whole file, no masks
-            keep_if_in, mask = False, set()
-            change = "update_preimage"
-        elif partition.kind == "delete_removed":
-            keep_if_in, mask = False, positions(partition.dv_old)
-            change = "delete"
-        elif partition.kind == "insert_unmasked":
-            # positions masked at v-1 but NOT at v re-enter the table
-            # (restore to a pre-delete snapshot)
-            keep_if_in = True
-            mask = positions(partition.dv_old) - positions(partition.dv_new)
-            change = "insert"
-        else:  # delete_masked / update_preimage: newly-masked positions
-            keep_if_in = True
-            mask = positions(partition.dv_new) - positions(partition.dv_old)
-            change = (
-                "update_preimage"
-                if partition.kind == "update_preimage"
-                else "delete"
-            )
-
+        drop = positions(u.masked_by)
+        keep = positions(u.only_in) if u.only_in is not None else None
         offset = 0
-        for batch in pq.ParquetFile(partition.path).iter_batches():
-            n = batch.num_rows
+        for batch in pq.ParquetFile(
+            os.path.join(partition.root, u.rel)
+        ).iter_batches():
             idx = [
                 i
-                for i in range(n)
-                if ((offset + i) in mask) == keep_if_in
+                for i in range(batch.num_rows)
+                if (offset + i) not in drop
+                and (keep is None or (offset + i) in keep)
             ]
-            offset += n
+            offset += batch.num_rows
             if not idx:
                 continue
             taken = batch.take(pa.array(idx, type=pa.int32()))
-            taken = _apply_column_ops_batch(
-                taken, getattr(partition, "col_ops", [])
-            )
-            taken = _append_partition_columns(
-                taken, partition.rel, getattr(partition, "pcols", [])
-            )
+            taken = _apply_column_ops_batch(taken, partition.col_ops)
+            taken = _append_partition_columns(taken, u.rel, partition.pcols)
             # project onto the declared data-column schema (order,
             # typed NULLs for absent columns, widened-type upcasts)
-            from fefal_etl_spark.arrow_meta import project_batch
-
-            sch = getattr(partition, "schema_arrow", None)
-            if sch is not None:
-                taken = project_batch(taken, sch)
+            if partition.schema_arrow is not None:
+                taken = project_batch(taken, partition.schema_arrow)
             cols = list(taken.columns) + [
-                pa.array([change] * len(idx), type=pa.string()),
-                pa.array([partition.version] * len(idx), type=pa.int64()),
+                pa.array([u.change] * len(idx), type=pa.string()),
+                pa.array([u.version] * len(idx), type=pa.int64()),
             ]
             names = list(taken.schema.names) + [
                 "_change_type",

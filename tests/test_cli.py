@@ -13,6 +13,9 @@ import sys
 
 from fefal_etl_spark.__main__ import main
 
+# the checkout these tests belong to: the CLI subprocesses run its code
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 COLS = [
     "Nome da Entidade", "Tipo de Entidade", "Responsável",
     "Existe responsável?", "Percentagem preenchida", "Data de início",
@@ -86,7 +89,7 @@ def test_cli_pipeline_end_to_end(spark, tmp_path):
          "--survey", str(survey_path), "--registry", registry_path,
          "--config", str(config_path), "--out", out_dir],
         capture_output=True, text=True, timeout=300, env=env,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
@@ -139,7 +142,7 @@ def test_cli_pipeline_accepts_mongo_export_config(spark, tmp_path):
          "--survey", str(survey_path), "--registry", registry_path,
          "--config", str(config_path), "--out", out_dir, "--year", "2025"],
         capture_output=True, text=True, timeout=300, env=env,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
@@ -152,7 +155,7 @@ def test_cli_pipeline_accepts_mongo_export_config(spark, tmp_path):
          "--survey", str(survey_path), "--registry", registry_path,
          "--config", str(config_path), "--out", out_dir],
         capture_output=True, text=True, timeout=120, env=env,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert proc2.returncode != 0 and "--year is required" in proc2.stderr
 
@@ -179,7 +182,7 @@ def test_cli_table_maintenance_end_to_end(spark, tmp_path):
         proc = subprocess.run(
             [sys.executable, "-m", "fefal_etl_spark", "table", root, *cli],
             capture_output=True, text=True, timeout=300, env=env,
-            cwd="/root/repo",
+            cwd=ROOT,
         )
         assert proc.returncode == 0, proc.stderr[-2000:]
         return json.loads(proc.stdout.strip().splitlines()[-1])

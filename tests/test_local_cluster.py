@@ -88,7 +88,6 @@ print("ALL-OK")
 """
 
 
-@pytest.mark.timeout(600)
 @pytest.mark.slow
 def test_local_cluster_smoke():
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -554,6 +554,42 @@ def test_cold_star_build_runs_one_job_and_fact_commits_one_each(
         release_star_cache()
 
 
+def test_star_builds_the_empty_group_dim_only_when_none_is_passed(
+    spark, fixtures, monkeypatch
+):
+    """build_star makes the empty dim_grupo_formacao local relation (an
+    Arrow round trip) only when the caller passes no such dim: a passed
+    one is returned as is, and one fewer ``_local`` call is made."""
+    import fefal_etl_spark.plans.star as star_mod
+
+    result, _ = fixtures
+    calls = []
+    real = star_mod._local
+
+    def counting(*args, **kwargs):
+        calls.append(args[2])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(star_mod, "_local", counting)
+    tipos = _tipos(spark)
+    build_star(result, tipos_disponibilidades=tipos)
+    without = list(calls)
+    calls.clear()
+    grupo = spark.createDataFrame(
+        [(1, "g", "d")],
+        "id_grupo_formacao bigint, nome_grupo string, descrissao_grupo string",
+    )
+    star = build_star(
+        result,
+        existing_dims={"dim_grupo_formacao": grupo},
+        tipos_disponibilidades=tipos,
+    )
+    assert star["dim_grupo_formacao"] is grupo
+    assert len(calls) == len(without) - 1
+    assert sum(s.startswith("id_grupo_formacao") for s in without) == 1
+    assert not any(s.startswith("id_grupo_formacao") for s in calls)
+
+
 HEADERS = ["h0 'q' \\ [x]", "h1\nline", "h2 `tick`", "h3 '' ", "h4", "h5", "h6", "h7"]
 
 

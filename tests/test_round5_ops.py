@@ -673,8 +673,9 @@ def test_txn_table_schema_evolution_append(spark, tmp_path):
 
 
 def test_txn_table_change_data_feed_roundtrip(spark, tmp_path):
-    """changes(v_from, v_to) emits the minimal I/U/D stream, and applying
-    it latest-wins over v_from reconstructs v_to exactly."""
+    """change_feed(v_from, v_to) replayed latest-wins over v_from
+    (per version: deletes/preimages, then inserts/postimages)
+    reconstructs v_to exactly."""
     from fefal_etl_spark.operators.upsert import apply_changelog
     from fefal_etl_spark.table import TransactionalTable
 
@@ -686,29 +687,24 @@ def test_txn_table_change_data_feed_roundtrip(spark, tmp_path):
     )
     t.merge(spark.createDataFrame([(2, "B"), (4, "d")], "k int, v string"), keys=["k"])
     t.delete_where(F.col("k") == 3)
-    cdf = t.changes(0, 2, keys=["k"])
-    got = {
-        (r["k"], r["op"], r["new_v"], r["old_v"]) for r in cdf.collect()
-    }
-    assert got == {
-        (2, "U", "B", "b"),
-        (3, "D", None, "c"),
-        (4, "I", "d", None),
-    }
-    # round-trip: v0 ∪ changes, latest-wins -> v2
+    cdf = t.change_feed(0, 2)
+    # round-trip: v0 ∪ the feed, latest-wins -> v2
     base = t.read(version=0).select(
-        "k", "v", F.lit(0).alias("__seq"), F.lit("U").alias("op")
+        "k", "v", F.lit(0).alias("__seq"), F.lit(0).alias("__ord"),
+        F.lit("U").alias("op"),
     )
+    out = F.col("_change_type").isin("delete", "update_preimage")
     feed = cdf.select(
         "k",
-        F.col("new_v").alias("v"),
-        F.lit(1).alias("__seq"),
-        "op",
+        "v",
+        F.col("_commit_version").alias("__seq"),
+        F.when(out, 0).otherwise(1).alias("__ord"),
+        F.when(out, "D").otherwise("U").alias("op"),
     )
     rebuilt = apply_changelog(
-        base.unionByName(feed), "k", seq_cols=["__seq"]
+        base.unionByName(feed), "k", seq_cols=["__seq", "__ord"]
     ).select("k", "v")
-    assert _rows(rebuilt.withColumnRenamed("v", "v")) == _rows(t.read(version=2))
+    assert _rows(rebuilt) == _rows(t.read(version=2))
 
 
 def test_txn_table_concurrent_appends_land_exactly_once(spark, tmp_path):
@@ -1551,7 +1547,7 @@ def test_review_fixes_null_delete_restore_delta_evolved_cdf(spark, tmp_path):
     a NULL predicate (SQL DELETE semantics, matching delete_where_dv);
     (2) row_deltas emits +1 re-inserts when restore() un-masks deletion
     vectors, so an incremental MV converges after a restore; (3) the
-    keyed changes() feed covers columns added between the snapshots."""
+    change feed covers columns added between the snapshots."""
     from fefal_etl_spark.materialized import IncrementalAggView
     from fefal_etl_spark.table import TransactionalTable
 
@@ -1587,9 +1583,8 @@ def test_review_fixes_null_delete_restore_delta_evolved_cdf(spark, tmp_path):
     got = mv.current().collect()[0]
     assert (got["n_rows"], float(got["sum_v"])) == (10, 45.0)
 
-    # (3) keyed CDF under schema evolution: updates to a NEW column emit
-    import fefal_etl_spark.operators.upsert as upsert
-
+    # (3) the change feed under schema evolution: a column added
+    # between the versions appears, typed NULL on the delete side
     t2 = TransactionalTable(spark, str(tmp_path / "evo"))
     t2.overwrite(
         spark.createDataFrame([(1, "x"), (2, "y")], "k long, s string")
@@ -1599,13 +1594,14 @@ def test_review_fixes_null_delete_restore_delta_evolved_cdf(spark, tmp_path):
             [(1, "x", 7.0), (2, "y", None)], "k long, s string, note double"
         )
     )
-    ch = t2.changes(0, 1, keys=["k"])
-    rows = {r["k"]: r for r in ch.collect()}
-    # k=1 gained note=7.0 -> a U event carrying the new column
-    assert rows[1]["op"] == "U" and rows[1]["new_note"] == 7.0
-    assert rows[1]["old_note"] is None
-    # k=2's note stayed NULL-equivalent and s unchanged -> no event
-    assert 2 not in rows
+    ch = t2.change_feed(0, 1)
+    assert dict(ch.dtypes)["note"] == "double"
+    rows = {(r["k"], r["_change_type"]): r for r in ch.collect()}
+    # k=1 gained note=7.0: the insert carries the new column, the
+    # delete of the old row carries a NULL there
+    assert rows[(1, "insert")]["note"] == 7.0
+    assert rows[(1, "delete")]["note"] is None
+    assert rows[(1, "delete")]["s"] == "x"
 
 
 @_posix_log

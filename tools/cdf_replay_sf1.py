@@ -30,20 +30,17 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-OUT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "docs",
-    "CDF_REPLAY_sf1.json",
-)
+OUT = os.path.join(ROOT, "docs", "CDF_REPLAY_sf1.json")
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/repo/.data/sf1")
+    ap.add_argument("--sf", default=os.path.join(ROOT, ".data", "sf1"))
     ap.add_argument(
-        "--root", default="/root/repo/.stage/cdf_replay_sf1"
+        "--root", default=os.path.join(ROOT, ".stage", "cdf_replay_sf1")
     )
     args = ap.parse_args()
 
@@ -143,7 +140,7 @@ def main() -> None:
     walls["replay_verify"] = round(time.time() - s, 2)
     n_live = live.count()
     payload = {
-        "sf_dir": args.sf,
+        "sf_dir": os.path.relpath(args.sf, ROOT),
         "rows_input": n_total,
         "rows_final": n_live,
         "versions": t.latest_version() + 1,

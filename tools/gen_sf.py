@@ -30,7 +30,7 @@ Design constraints (why this is not a naive concat):
   `load_table` nanos contract stays exercised at sf1).
 
 Usage:  python tools/gen_sf.py [--src /root/testdata/sf0.1]
-                               [--out /root/repo/.data/sf1] [--copies 10]
+                               [--out .data/sf1] [--copies 10]
 Output is gitignored; regeneration is byte-stable (seeded, single
 file per table, one row group order).
 """
@@ -326,7 +326,14 @@ def generate(src: str, out: str, copies: int, zipf_docs: bool = False) -> None:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
-    ap.add_argument("--out", default="/root/repo/.data/sf1")
+    ap.add_argument(
+        "--out",
+        default=os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            ".data",
+            "sf1",
+        ),
+    )
     ap.add_argument("--copies", type=int, default=10)
     ap.add_argument(
         "--zipf-docs",
