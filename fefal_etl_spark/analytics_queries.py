@@ -397,8 +397,8 @@ def _trade_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative-propagation template #3 — PageRank (2 unrolled rounds,
     d=0.85) over the bidirectional customer↔supplier trade graph derived
-    from co-occurrence in orders. Same design family as the k-means and
-    label-propagation templates: fixed rounds unroll into one lazy DAG,
+    from co-occurrence in orders. Same design family as the k-means
+    template: fixed rounds unroll into one lazy DAG,
     the edge frame persists once, each round = two node-keyed shuffles.
     Because the graph is bidirectional every node has out-edges, so the
     dangling-mass term vanishes exactly. Ranks rounded to 9 (float sums
@@ -435,37 +435,27 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hierarchy_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical/recursive query class: root-to-node ancestor paths over
     the implicit binary tree parent(n) = n/2 on order keys 1–255. Spark
-    has no recursive CTE, so the walk UNROLLS into 8 bounded climb rounds
-    (depth ≤ ⌊log₂ 255⌋) — here pure narrow arithmetic (zero joins, zero
-    shuffles); with an explicit parent table each round becomes one
-    broadcast join against the dim-sized parent map. The standard
-    fixed-depth hierarchy pattern (BOM explosion, org charts);
-    unbounded-depth goes through the connected-components-style loop.
-    Oracle = genuine recursive CTE."""
+    has no recursive CTE, and this tree needs none: the ancestor k levels
+    up is ``id >> k``, so depth = bit length − 1 and the path is the
+    shifts from ``depth`` down to 0 — one narrow projection (zero joins,
+    zero shuffles). Unrolling the climb instead (one nested select per
+    level) doubles the expression each level, and the generated class
+    for 8 levels outgrows janino's 64 KB limit. With an explicit parent
+    table each level becomes one broadcast join against the dim-sized
+    parent map (BOM explosion, org charts). Oracle = genuine recursive
+    CTE."""
     orders = load_table(spark, sf_dir, "orders")
     nodes = orders.filter(F.col("o_orderkey").between(1, 255)).select(
         F.col("o_orderkey").alias("id")
     )
-    r = nodes.select(
-        "id", F.col("id").alias("cur"), F.col("id").cast("string").alias("path")
+    # shiftright() only takes a literal shift in the Python API; the SQL
+    # form accepts the lambda variable
+    path = F.expr(
+        "transform(sequence(depth, 0, -1), k -> CAST(shiftright(id, k) AS STRING))"
     )
-    for _ in range(8):
-        parent = F.floor(F.col("cur") / 2)
-        r = r.select(
-            "id",
-            F.when(F.col("cur") > 1, parent).otherwise(F.col("cur")).alias("cur"),
-            F.when(
-                F.col("cur") > 1,
-                F.concat(parent.cast("string"), F.lit("/"), F.col("path")),
-            )
-            .otherwise(F.col("path"))
-            .alias("path"),
-        )
-    return r.filter(F.col("cur") == 1).select(
-        "id",
-        (F.size(F.split(F.col("path"), "/")) - 1).cast("int").alias("depth"),
-        "path",
-    )
+    return nodes.select(
+        "id", (F.length(F.bin("id")) - 1).cast("int").alias("depth")
+    ).select("id", "depth", F.concat_ws("/", path).alias("path"))
 
 
 # ==========================================================================

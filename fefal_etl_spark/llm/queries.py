@@ -2434,14 +2434,13 @@ def q_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 capstone — transitive closure of near-dup *pairs* into duplicate
-    *clusters* (connected components by min-label propagation,
-    llm/dedup.py::connected_components). The edge list plants two-hop
-    chains (A–A′ and A′–A″ for every 20th doc) so the closure genuinely
-    propagates: pairwise output alone would miss A≈A″. Oracle = recursive
-    CTE computing min-reachable-id per node. This is the step between any
-    pair generator (minhash/simhash/semdedup) and a dedup verdict.
-    Runs in the default rounds-until-converged mode — correctness no
-    longer leans on these chains happening to be 2 hops deep."""
+    *clusters* (connected components by driver-side union-find over the
+    collected edge list, llm/dedup.py::connected_components). The edge
+    list plants two-hop chains (A–A′ and A′–A″ for every 20th doc) so the
+    closure genuinely spans hops: pairwise output alone would miss A≈A″.
+    Oracle = recursive CTE computing min-reachable-id per node. This is
+    the step between any pair generator (minhash/simhash/semdedup) and a
+    dedup verdict."""
     from fefal_etl_spark.llm.dedup import connected_components
 
     _assert_plant_headroom(spark, sf_dir, "documents", "doc_id")
@@ -3167,14 +3166,13 @@ def q_token_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E1 — connected components via alternating small-star/large-star
-    (llm/dedup.py::connected_components_star, Kiveris et al. SoCC'14):
-    the O(log n)-round form for unbounded-diameter graphs. The planted
-    edge list is a 61-node CHAIN (diameter 60 — min-label propagation
-    would need 60 shuffles; the star form stabilizes in ~6 two-shuffle
-    rounds) plus disjoint near-dup pairs. Oracle = the same recursive-CTE
-    closure as `dup_clusters`."""
-    from fefal_etl_spark.llm.dedup import connected_components_star
+    """E1 — connected components of a long chain
+    (llm/dedup.py::connected_components). The planted edge list is a
+    61-node CHAIN (diameter 60 — a round-per-hop propagation would need
+    60 shuffles; union-find over the collected edges needs one job) plus
+    disjoint near-dup pairs. Oracle = the same recursive-CTE closure as
+    `dup_clusters`."""
+    from fefal_etl_spark.llm.dedup import connected_components
 
     ids = load_table(spark, sf_dir, "documents").select("doc_id")
     nxt = ids.select((F.col("doc_id")).alias("k"))
@@ -3186,7 +3184,7 @@ def q_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = ids.filter((F.col("doc_id") % 10 == 0) & (F.col("doc_id") >= 100)).select(
         F.col("doc_id").alias("src"), (F.col("doc_id") + 1000000).alias("dst")
     )
-    out = connected_components_star(chain.unionByName(pairs))
+    out = connected_components(chain.unionByName(pairs))
     return out.select(F.col("node").cast("long"), F.col("component").cast("long"))
 
 

@@ -251,11 +251,12 @@ def cluster_safe_split(
     cluster lands together; singletons (no edges) fall back to their own
     id and reproduce :func:`train_test_split` exactly.
 
-    Scale shape: components are computed on the EDGE list only (≪ corpus
-    — only docs with at least one near-dup pair appear), then joined back
-    to the corpus once on the doc key; the corpus itself never enters the
-    iteration. Split membership stays a pure function of (salt, component
-    min-id), invariant to partitioning, rerun, and engine.
+    Scale shape: components are computed on the driver from the collected
+    EDGE list only (≪ corpus — only docs with at least one near-dup pair
+    appear; it must fit in driver memory), then joined back to the corpus
+    once on the doc key; the corpus itself is never collected. Split
+    membership stays a pure function of (salt, component min-id),
+    invariant to partitioning, rerun, and engine.
 
     Output: (id, component, side∈{train,test}).
     """

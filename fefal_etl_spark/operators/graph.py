@@ -1,11 +1,12 @@
 """Graph propagation operators expressed as DataFrame algebra.
 
-Together with :func:`fefal_etl_spark.llm.dedup.connected_components` (label
-propagation) and :func:`fefal_etl_spark.llm.similarity.kmeans_assignments`
-(numeric refinement), :func:`pagerank` completes the engine's iterative-
+Together with :func:`fefal_etl_spark.llm.similarity.kmeans_assignments`
+(numeric refinement), :func:`pagerank` is one of the engine's iterative-
 algorithm templates: each round is a join + aggregation keyed on the node
 id, the fixed-round loop unrolls into one lazy DAG, and nothing ever
-touches the driver.
+touches the driver. Connected components
+(:func:`fefal_etl_spark.llm.dedup.connected_components`) is the exception:
+it collects its edge list and runs union-find on the driver.
 """
 
 from __future__ import annotations
@@ -181,11 +182,9 @@ def bfs_levels(
     one src-keyed join (frontier ⋈ edges) + distinct + anti-join against
     the visited set; the frontier and visited frames persist per round
     and the loop exits EARLY on an empty frontier (one count() action
-    per round — a scalar, bounded by ``max_hops``, the same
-    convergence-check shape as connected_components). For
-    diameter-unbounded traversals at 100 TB, checkpoint visited every
-    few rounds to cut lineage, exactly like the CC template
-    (llm/dedup.py); frontier size — not graph size — bounds each
+    per round — a scalar, bounded by ``max_hops``). For
+    diameter-unbounded traversals, checkpoint visited every few rounds
+    to cut lineage; frontier size — not graph size — bounds each
     round's shuffle.
 
     ``prune_visited=False`` selects the LAYERED MIN-AGGREGATION form:

@@ -93,9 +93,6 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.driver.memory", driver_mem)
-        # reliable-checkpoint files are deleted when their RDD is GC'd
-        # (pairs with llm/dedup._reliable_checkpoint's temp-dir cleanup)
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # ContextCleaner is driven by JVM weak references: with a large
         # driver heap, full GCs are rare and dead broadcasts/shuffle
         # state from a many-query session pile up in the block manager

@@ -722,37 +722,6 @@ def test_vocab_coverage_scores_oov_docs_low(spark):
     assert out[101]["n_tokens"] == 4 and out[101]["n_in_vocab"] == 2
 
 
-@pytest.mark.slow
-def test_connected_components_star_matches_propagation(spark):
-    import random
-
-    from fefal_etl_spark.llm.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(7)
-    cases = [
-        # 60-node path: diameter 59 — the propagation form would need 59
-        # rounds; the star form must finish in O(log n)
-        [(i, i + 1) for i in range(60)],
-        # random sparse graph + self-loop + duplicate/reversed edges
-        [(rng.randrange(30), rng.randrange(30)) for _ in range(40)]
-        + [(5, 5), (2, 1), (1, 2)],
-    ]
-    for edge_list in cases:
-        edges = spark.createDataFrame(edge_list, "src long, dst long")
-        want = {
-            (r["node"], r["component"])
-            for r in connected_components(edges, max_iters=100).collect()
-        }
-        got = {
-            (r["node"], r["component"])
-            for r in connected_components_star(edges).collect()
-        }
-        assert got == want
-
-
 def test_quantized_prefilter_keeps_true_neighbors(spark):
     from pyspark.sql import functions as F
 

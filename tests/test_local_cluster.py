@@ -56,7 +56,8 @@ print("OK entry", n)
 
 qs = entrymod.queries()
 # 2. Arrow hook (grouped applyInPandas state machine)
-# 3. iterative operator (connected components over planted dup pairs)
+# 3. driver-side operator (connected components: union-find over the
+#    collected planted dup pairs)
 # 4. broadcast dim join (nation dim broadcast under a fact agg)
 # 5. executor-side file IO inside mapInPandas (distributed Excel read)
 for name in (

@@ -262,13 +262,15 @@ def test_promote_duplicate_invariants(spark, rows, promo_positions):
     assert {r["pos"]: r["status"] for r in again.collect()} == after
 
 
-@pytest.mark.slow
 def test_connected_components_matches_union_find(spark):
-    """Min-label propagation must agree with a driver-side union-find on
+    """Connected components must agree with an independent union-find on
     adversarial small graphs: a max-diameter path, duplicate + reversed
     edges, self-loops, and multiple components in one edge list."""
+    import random
+
     from fefal_etl_spark.llm.dedup import connected_components
 
+    rng = random.Random(7)
     cases = [
         # worst-case diameter: a path 0-1-2-...-7 given in scrambled order
         [(6, 7), (0, 1), (4, 5), (2, 3), (1, 2), (5, 6), (3, 4)],
@@ -276,6 +278,11 @@ def test_connected_components_matches_union_find(spark):
         [(1, 2), (2, 1), (1, 2), (3, 3), (4, 5), (5, 6), (4, 6)],
         # star + isolated self-loop
         [(9, 1), (9, 2), (9, 3), (0, 0)],
+        # 60-node path: diameter 59
+        [(i, i + 1) for i in range(60)],
+        # random sparse graph + self-loop + duplicate/reversed edges
+        [(rng.randrange(30), rng.randrange(30)) for _ in range(40)]
+        + [(5, 5), (2, 1), (1, 2)],
     ]
     for edge_list in cases:
         parent = {}
@@ -306,7 +313,7 @@ def test_connected_components_matches_union_find(spark):
         edges = spark.createDataFrame(edge_list, "src long, dst long")
         got = {
             r["node"]: r["component"]
-            for r in connected_components(edges, iters=7).collect()
+            for r in connected_components(edges).collect()
         }
         assert got == truth
 

@@ -161,8 +161,6 @@ SMJ_WHITELIST = {
     "min_cost_supplier",          # derived×derived min-equality join
     "gaussian_lsh_recall",        # audit-scale truth join
     "star_idempotent_reload",     # reload-vs-dim truth join
-    "dup_clusters_star",          # node×parent resolution: both sides are
-                                  # node-cardinality at scale — SMJ correct
     "cluster_safe_split",         # corpus×components: in a dup-heavy corpus
                                   # the component map approaches corpus
                                   # cardinality — SMJ is the safe static
@@ -260,16 +258,6 @@ def test_round3_plans_no_python_no_cartesian(spark):
         text = plan_of(q[name](spark, sf))
         assert "BatchEvalPython" not in text, name
         assert "CartesianProduct" not in text, name
-    # connected components: the registry query (convergence mode) runs its
-    # rounds eagerly and returns a checkpoint scan, so its per-round join is
-    # INVISIBLE to plan-only gates — assert the round shape on the unrolled
-    # fixed-iters form instead (same one_round code path)
-    from fefal_etl_spark.llm.dedup import connected_components
-
-    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    text = plan_of(connected_components(edges, iters=3))
-    assert "BatchEvalPython" not in text, text
-    assert "CartesianProduct" not in text, text
     # decontaminate: the eval shingle set is the broadcast side
     text = plan_of(q["decontaminate_overlap"](spark, sf))
     assert "BroadcastHashJoin" in text, text
