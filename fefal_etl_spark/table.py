@@ -547,6 +547,37 @@ def change_units(
     return units, state
 
 
+def _footer_schema(path: str):
+    """The Spark schema Spark's parquet writer stored in the footer of
+    the file at ``path`` (key ``org.apache.spark.sql.parquet.row.metadata``,
+    the same key Spark's schema inference reads), with every field
+    nullable at every level as Spark's file source makes it. Read on
+    the driver with pyarrow: no Spark job. None when the footer carries
+    no such key (pyarrow-written files, e.g. the ``txn_table`` sink's)
+    or cannot be read; the caller then lets Spark infer."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    def nullable(t):
+        if isinstance(t, StructType):
+            return StructType([
+                StructField(f.name, nullable(f.dataType), True, f.metadata)
+                for f in t.fields
+            ])
+        if isinstance(t, ArrayType):
+            return ArrayType(nullable(t.elementType), True)
+        if isinstance(t, MapType):
+            return MapType(nullable(t.keyType), nullable(t.valueType), True)
+        return t
+
+    try:
+        kv = pq.read_metadata(path).metadata or {}
+    except OSError:
+        return None
+    raw = kv.get(b"org.apache.spark.sql.parquet.row.metadata")
+    return None if raw is None else nullable(StructType.fromJson(json.loads(raw)))
+
+
 #: process-wide shared memory backend for FEFAL_TABLE_BACKEND=memory —
 #: one instance, so separate handles on the same root see one log
 _MEMORY_BACKEND = None
@@ -837,13 +868,20 @@ class TransactionalTable:
         column_ops: list | None = None,
         recorded_schema: dict[str, str] | None = None,
     ) -> DataFrame:
-        """Manifest-driven scan of specific part-files. Files are grouped
-        by their commit directory and each group is read with ``basePath``
-        pointing at that commit dir, so hive-layout partition columns
-        (``col=value`` path segments) are reconstructed per group exactly
-        as Spark's partitioned reader does — then the groups union. For
-        unpartitioned commits basePath is a no-op and this degenerates to
-        one multi-path read.
+        """Manifest-driven scan of specific part-files, with one read
+        loop. Files are grouped by their commit directory, and each
+        group's schema is the one Spark's writer stored in its first
+        file's footer (:func:`_footer_schema`, read on the driver), so
+        building the scan runs no Spark job. Groups are then bucketed,
+        in first-appearance order, by (schema, plus the commit dir when
+        the group has hive ``col=value`` segments or no footer schema);
+        each bucket is one multi-path read and the buckets union by
+        name. A hive bucket is read with ``basePath`` at its commit dir,
+        so Spark takes its partition columns from the path; a bucket
+        without a footer schema lets Spark infer one. Columns a bucket
+        lacks surface as typed NULLs (``allowMissingColumns``: the
+        schema-evolution contract), and the first bucket's column order
+        leads.
 
         ``dv_files`` = the snapshot's deletion-vector sidecars: the scan
         appends the file-constant ``_metadata.file_path`` (normalized to
@@ -859,11 +897,11 @@ class TransactionalTable:
         The plan is kept in the session cache (kind ``read_plan``): data
         files under a commit dir are uuid-addressed and write-once, so
         an identical request over the same root is an identical lazy
-        plan, and rebuilding it cost a few hundred ms of driver/py4j
-        work on every snapshot read of an unchanged table. The entry is
-        only an analyzed plan (every action still scans the parquet
-        bytes), so the request itself is the whole key; the newest 256
-        plans are kept."""
+        plan, and rebuilding it costs tens of ms of driver/py4j work on
+        every snapshot read of an unchanged table. The entry is only an
+        analyzed plan (every action still scans the parquet bytes), so
+        the request itself is the whole key; the newest 256 plans are
+        kept."""
         from pyspark.sql import functions as F
 
         need_meta = with_pos or bool(dv_files)
@@ -882,83 +920,36 @@ class TransactionalTable:
         prefix = "file:" + root_abs + "/"
         groups: dict[str, list[str]] = {}
         for f in files:  # group order = manifest order (deterministic)
-            commit = "/".join(f.split("/")[:2])  # data/<uuid>
-            groups.setdefault(commit, []).append(f)
-        # Per-commit parquet schemas are immutable (commit dirs are
-        # uuid-addressed, written once), so the footer-inferred schema is
-        # kept in the session cache (kind ``commit_schema``, keyed by
-        # table root and commit dir alone): reader creation with an
-        # explicit schema skips footer inference + a py4j analysis round
-        # trip (measured ~180 ms → ~70 ms per group at sf0.1, and the
-        # fast path below collapses G group readers into one). It is
-        # recorded by the first read of a group, never probed for. Pure
-        # metadata reuse — every action still scans the parquet files.
-        cached = {
-            c: peek(self.spark, "commit_schema", (root_abs, c))
-            for c in groups
-        }
-        hive = any(
-            "=" in seg for f in files for seg in f.split("/")[2:-1]
-        )
-        first = next(iter(cached.values()))
+            groups.setdefault("/".join(f.split("/")[:2]), []).append(f)
+        buckets: dict[tuple, list[str]] = {}
+        for commit, fs in groups.items():  # commit = data/<uuid>
+            schema = _footer_schema(os.path.join(self.root, fs[0]))
+            hive = any("=" in seg for f in fs for seg in f.split("/")[2:-1])
+            base = commit if hive or schema is None else None
+            buckets.setdefault((schema, base), []).extend(fs)
         out: DataFrame | None = None
-        if (
-            len(groups) > 1
-            and not hive
-            and first is not None
-            and all(s == first for s in cached.values())
-        ):
-            # every commit group shares one physical schema and no
-            # hive-layout partition columns: a single multi-path read
-            # with the known schema is plan-identical to the
-            # unionByName chain (same columns, same order, no missing
-            # columns to NULL-fill) at a fraction of the driver cost
-            out = self.spark.read.schema(first).parquet(
-                *[os.path.join(self.root, f) for f in files]
-            )
+        for (schema, base), fs in buckets.items():
+            reader = self.spark.read
+            if base is not None:
+                reader = reader.option(
+                    "basePath", os.path.join(self.root, base)
+                )
+            if schema is not None:
+                reader = reader.schema(schema)
+            df = reader.parquet(*[os.path.join(self.root, f) for f in fs])
             if need_meta:
-                out = out.select(
+                df = df.select(
                     "*",
                     F.col("_metadata.file_path")
                     .substr(F.lit(len(prefix) + 1), F.lit(1 << 30))
                     .alias("__dv_file"),
                     F.col("_metadata.row_index").alias("__dv_pos"),
                 )
-        else:
-            for commit, fs in groups.items():
-                reader = self.spark.read.option(
-                    "basePath", os.path.join(self.root, commit)
-                )
-                known = cached.get(commit)
-                if known is not None:
-                    reader = reader.schema(known)
-                df = reader.parquet(
-                    *[os.path.join(self.root, f) for f in fs]
-                )
-                if known is None:
-                    memo(
-                        self.spark,
-                        "commit_schema",
-                        (root_abs, commit),
-                        lambda: df.schema,
-                    )
-                if need_meta:
-                    df = df.select(
-                        "*",
-                        F.col("_metadata.file_path")
-                        .substr(F.lit(len(prefix) + 1), F.lit(1 << 30))
-                        .alias("__dv_file"),
-                        F.col("_metadata.row_index").alias("__dv_pos"),
-                    )
-                # allowMissingColumns: commits written before a column was
-                # added surface it as typed NULLs — the schema-evolution
-                # contract (same semantics as a mergeSchema scan; the first
-                # manifest group's column order leads)
-                out = (
-                    df
-                    if out is None
-                    else out.unionByName(df, allowMissingColumns=True)
-                )
+            out = (
+                df
+                if out is None
+                else out.unionByName(df, allowMissingColumns=True)
+            )
         assert out is not None
         if dv_files:
             out = out.join(
@@ -1030,9 +1021,7 @@ class TransactionalTable:
         sidecars ``dv_files`` name."""
         from pyspark.sql import functions as F
 
-        return self.spark.read.parquet(
-            *[os.path.join(self.root, f) for f in dv_files]
-        ).select(
+        return self._read_files(dv_files).select(
             F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
         )
 
@@ -2811,9 +2800,7 @@ class TransactionalTable:
         mf = self._read_manifest(base)
         if not mf.dv_files:
             return None
-        dv = self.spark.read.parquet(
-            *[os.path.join(self.root, f) for f in mf.dv_files]
-        )
+        dv = self._read_files(mf.dv_files)
         masked = {
             r["file"]: r["n"]
             for r in dv.groupBy("file")
@@ -2888,9 +2875,7 @@ class TransactionalTable:
         mf = self._read_manifest(v)  # type: ignore[arg-type]
         if not mf.dv_files:
             return 0
-        return self.spark.read.parquet(
-            *[os.path.join(self.root, f) for f in mf.dv_files]
-        ).count()
+        return self._read_files(mf.dv_files).count()
 
     @staticmethod
     def _staged_key_pred(staged_stats: dict, keys: list[str]) -> str | None:

@@ -7,6 +7,10 @@ import pytest
 # its own code
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+# a 4 GB driver heap holds the suite's sf0.001 data with room to spare; the
+# 8 GB library default took the suite's JVM to ~10 GB RSS. An explicit
+# SPARK_GRAFT_DRIVER_MEM still wins.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")

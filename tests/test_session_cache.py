@@ -106,7 +106,6 @@ KINDS = [
     ("corpus_n", _corpus_n, True),
     ("staged_read", _staged_read, False),
     ("read_plan", _table_read, False),
-    ("commit_schema", _table_read, False),
     ("xls_fixture", _xls, False),
 ]
 
